@@ -42,8 +42,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * iff it contains a `_txlog` log. All tables are MANAGED — the table
   * is its directory, DROP deletes it; external `location`s are
   * rejected (point `format("txlog").load(path)` at foreign paths
-  * instead). Namespace properties live in a `_namespace` sidecar
-  * rendered with the manifest JSON primitives.
+  * instead). Namespace properties live in a `_namespace` sidecar of
+  * `key=value` lines.
   *
   * Catalog metadata ops are O(1) directory probes + one manifest-log
   * listing — no directory walks over data; at 100 TB the catalog cost

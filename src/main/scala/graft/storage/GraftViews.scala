@@ -33,91 +33,8 @@ object GraftViews {
                           columnComments: Seq[String],
                           properties: Map[String, String])
 
-  // ---- tiny JSON (the manifest pattern: exact, dependency-free)
-
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def arr(xs: Seq[String]): String = xs.map(q).mkString("[", ", ", "]")
-
-  private def render(v: Stored): String =
-    s"""{"sql": ${q(v.sql)}, "cat": ${q(v.currentCatalog)}, """ +
-      s""""ns": ${arr(v.currentNamespace)}, "schema": ${q(v.schemaDdl)}, """ +
-      s""""qcols": ${arr(v.queryColumnNames)}, """ +
-      s""""aliases": ${arr(v.columnAliases)}, """ +
-      s""""comments": ${arr(v.columnComments)}, """ +
-      s""""props": {${v.properties.toSeq.sorted
-        .map { case (k, x) => s"${q(k)}: ${q(x)}" }.mkString(", ")}}}"""
-
-  private def parse(s: String): Stored = {
-    // same hand-rolled scanner the manifests use — the shape is fixed
-    def scanString(from: Int): (String, Int) = {
-      require(s(from) == '"', s"expected string at $from in view json")
-      val b = new StringBuilder
-      var i = from + 1
-      while (s(i) != '"') {
-        if (s(i) == '\\') {
-          s(i + 1) match {
-            case 'n' => b += '\n'; i += 2
-            case 'r' => b += '\r'; i += 2
-            case 't' => b += '\t'; i += 2
-            case 'u' =>
-              b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-              i += 6
-            case c => b += c; i += 2
-          }
-        } else { b += s(i); i += 1 }
-      }
-      (b.toString, i + 1)
-    }
-    def keyFrom(k: String, from: Int): Int = {
-      val i = s.indexOf("\"" + k + "\": ", from)
-      require(i >= 0, s"missing $k in view json")
-      i + k.length + 4
-    }
-    def scanArr(from: Int): (Seq[String], Int) = {
-      var i = s.indexOf('[', from) + 1
-      val out = Seq.newBuilder[String]
-      while (s(i) != ']') {
-        if (s(i) == '"') { val (v, j) = scanString(i); out += v; i = j }
-        else i += 1
-      }
-      (out.result(), i + 1)
-    }
-    val (sql, i1) = scanString(keyFrom("sql", 0))
-    val (cat, i2) = scanString(keyFrom("cat", i1))
-    val (ns, i3) = scanArr(keyFrom("ns", i2))
-    val (schema, i4) = scanString(keyFrom("schema", i3))
-    val (qcols, i5) = scanArr(keyFrom("qcols", i4))
-    val (aliases, i6) = scanArr(keyFrom("aliases", i5))
-    val (comments, i7) = scanArr(keyFrom("comments", i6))
-    val props = {
-      var i = s.indexOf('{', keyFrom("props", i7) - 1)
-      require(i >= 0, "missing props in view json")
-      i += 1
-      val out = Map.newBuilder[String, String]
-      while (s(i) != '}') {
-        if (s(i) == '"') {
-          val (k, j) = scanString(i)
-          val (v, j2) = scanString(s.indexOf('"', j))
-          out += k -> v
-          i = j2
-        } else i += 1
-      }
-      out.result()
-    }
-    Stored(sql, cat, ns, schema, qcols, aliases, comments, props)
-  }
-
-  // ---- filesystem
+  // ---- filesystem (documents are encoded by [[TxJson]]: a fixed key
+  // order, `": "`/`", "` spacing and sorted props keep them byte-stable)
 
   def path(nsDir: Path, name: String): Path =
     new Path(new Path(nsDir, Dir), s"$name.json")
@@ -130,7 +47,7 @@ object GraftViews {
     if (replace) f.delete(p, false)
     try {
       val out = f.create(p, false)
-      try out.write(render(v).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.write(TxJson.encodeView(v).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       true
     } catch { case _: java.io.IOException if !replace => false }
@@ -142,12 +59,8 @@ object GraftViews {
     if (!f.exists(p)) None
     else {
       val in = f.open(p)
-      try {
-        val len = f.getFileStatus(p).getLen.toInt
-        val b = new Array[Byte](len)
-        in.readFully(b)
-        Some(parse(new String(b, java.nio.charset.StandardCharsets.UTF_8)))
-      } finally in.close()
+      val b = try in.readAllBytes() finally in.close()
+      Some(TxJson.decodeView(new String(b, java.nio.charset.StandardCharsets.UTF_8)))
     }
   }
 

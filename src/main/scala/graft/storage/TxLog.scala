@@ -1,6 +1,6 @@
 package graft.storage
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{assert_true, coalesce, col, input_file_name, lit, max, min, not, when}
 
@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions.{assert_true, coalesce, col, input_file_na
   * relative to the table root), plus an optional (writerId, batchId)
   * idempotence token and a `checkpoint` flag. The COMMIT is an atomic
   * put-if-absent of the manifest into the next version slot (hard-link
-  * on POSIX, create-no-overwrite on HDFS — see [[putIfAbsent]]):
+  * on POSIX, create-no-overwrite on HDFS — see [[publish]]):
   *
   *  - put succeeds → the txn and ALL its files become visible
   *    together (readers only read files named by manifests);
@@ -60,6 +60,22 @@ object TxLog {
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
   private def manifestName(v: Long): String = f"v$v%020d.json"
+
+  /** The log's manifest files, version-ordered (zero-padded names sort
+    * numerically); staging `.tmp-` files and anything else are not
+    * manifests. */
+  private def manifestFiles(s: SparkSession, table: String): Seq[FileStatus] = {
+    val dir = new Path(table, LogDir)
+    val f = fs(s, dir)
+    if (!f.exists(dir)) Seq.empty
+    else f.listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName
+      n.startsWith("v") && n.endsWith(".json")
+    }.sortBy(_.getPath.getName)
+  }
+
+  private def versionOf(st: FileStatus): Long =
+    st.getPath.getName.stripPrefix("v").stripSuffix(".json").toLong
 
   /** Writer-id classes the ENGINE mints with a fresh uuid per operation
     * (maintenance commands, batch saves, SQL DML statements) — their
@@ -146,6 +162,9 @@ object TxLog {
     def isIdentity: Boolean = retired.isEmpty && map.forall(e => e._1 == e._2)
   }
 
+  /** One committed transaction, `_txlog/v<version>.json`, encoded by
+    * [[TxJson]]: the key order and `": "`/`", "` spacing are kept so
+    * manifests stay byte-stable across releases. */
   private[storage] case class Manifest(version: Long, files: Seq[String],
                               writerId: String, batchId: Long,
                               checkpoint: Boolean,
@@ -190,341 +209,8 @@ object TxLog {
     if (c != null) c() else System.currentTimeMillis()
   }
 
-  // hand-rolled JSON (matches the repo's zero-dependency stance); file
-  // paths are uuid/part names we generate — no escaping needed beyond
-  // the standard quote/backslash set
-  private def q(x: String): String =
-    "\"" + x.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
-  private def render(m: Manifest): String = {
-    // key order is LOAD-BEARING for the cursor parser: version,
-    // checkpoint, writer_id, batch_id, [ts], files, [removes], [dvs],
-    // [eqdels], [eqdrops], [branch], [adopts], [nrid], [schema], [pcols],
-    // [changes], [props], [tokens], [stats] — optional keys are
-    // omitted (not null) so pre-feature manifests and append-only
-    // manifests keep the exact old shape
-    val removes =
-      if (m.removes.isEmpty) ""
-      else ", \"removes\": [" + m.removes.map(q).mkString(", ") + "]"
-    val dvs =
-      if (m.dvs.isEmpty) ""
-      else ", \"dvs\": [" + m.dvs.map { d =>
-        s"""{"f": ${q(d.f)}, "p": ${q(d.p)}, "n": ${d.n}}"""
-      }.mkString(", ") + "]"
-    val eqdels =
-      if (m.eqdels.isEmpty) ""
-      else ", \"eqdels\": [" + m.eqdels.map { e =>
-        s"""{"p": ${q(e.p)}, "cols": [${e.cols.map(q).mkString(", ")}], "n": ${e.n}}"""
-      }.mkString(", ") + "]"
-    val eqdrops =
-      if (m.eqdrops.isEmpty) ""
-      else ", \"eqdrops\": [" + m.eqdrops.map(q).mkString(", ") + "]"
-    val branch = m.branch.map(b => s""", "branch": ${q(b)}""").getOrElse("")
-    val adopts =
-      if (m.adopts.isEmpty) ""
-      else ", \"adopts\": [" + m.adopts.mkString(", ") + "]"
-    val nrid = if (m.nextRid >= 0L) s""", "nrid": ${m.nextRid}""" else ""
-    val schema = m.schema.map(d => s""", "schema": ${q(d)}""").getOrElse("")
-    val pcols =
-      if (m.pcols.isEmpty) ""
-      else ", \"pcols\": [" + m.pcols.map(q).mkString(", ") + "]"
-    val changes =
-      if (m.changes.isEmpty) ""
-      else ", \"changes\": [" + m.changes.map(q).mkString(", ") + "]"
-    // props is presence-aware: `"props": []` RECORDS an explicitly
-    // emptied map (removeProperties of the last key), distinct from the
-    // omitted key of a manifest that records nothing — newest-wins
-    // would otherwise resurrect the pre-removal map
-    val props = m.props.map(ps => ", \"props\": [" + ps.map { case (k, v) =>
-      s"""{"k": ${q(k)}, "v": ${q(v)}}"""
-    }.mkString(", ") + "]").getOrElse("")
-    // presence-aware like props: an overwrite RESETS the mapping by
-    // recording an explicitly empty one
-    val cmap = m.cmap.map { cm =>
-      val pairs = cm.map.map { case (l, p) =>
-        s"""{"l": ${q(l)}, "p": ${q(p)}}"""
-      }.mkString(", ")
-      val retired = cm.retired.map(q).mkString(", ")
-      s""", "cmap": {"m": [$pairs], "r": [$retired]}"""
-    }.getOrElse("")
-    val tokens =
-      if (m.tokens.isEmpty) ""
-      else ", \"tokens\": [" + m.tokens.map { case (w, b) =>
-        s"""{"w": ${q(w)}, "b": $b}"""
-      }.mkString(", ") + "]"
-    val stats =
-      if (m.stats.isEmpty) ""
-      else ", \"stats\": [" + m.stats.map { fst =>
-        val cols = fst.cols.map { c =>
-          // kmv is OPTIONAL (omitted when not collected) so pre-feature
-          // manifests and their parses keep the exact old shape
-          val kmv =
-            if (c.kmv.isEmpty) ""
-            else s""", "kmv": ${q(c.kmv.mkString(","))}"""
-          // "x" (exact string bounds) is OPTIONAL like kmv: pre-feature
-          // manifests and their parses keep the exact old shape
-          val x = if (c.exact) """, "x": "1"""" else ""
-          s"""{"c": ${q(c.col)}, "t": ${q(c.tag)}, "h": ${q(if (c.has) "1" else "0")}, """ +
-            s""""min": ${q(c.min)}, "max": ${q(c.max)}, "n": ${c.nulls}$kmv$x}"""
-        }.mkString(", ")
-        // bytes and pv are OPTIONAL (omitted when unknown/unpartitioned)
-        // so pre-feature manifests and their parses keep the exact old
-        // shape
-        val bytes = if (fst.bytes > 0L) s""", "bytes": ${fst.bytes}""" else ""
-        // rid (first row id) is OPTIONAL like bytes: pre-feature
-        // manifests and their parses keep the exact old shape
-        val rid =
-          if (fst.firstRowId >= 0L) s""", "rid": ${fst.firstRowId}""" else ""
-        val pv =
-          if (fst.parts.isEmpty) ""
-          else ", \"pv\": [" + fst.parts.map { case (c, v) =>
-            s"""{"c": ${q(c)}, "v": ${q(v)}}"""
-          }.mkString(", ") + "]"
-        s"""{"f": ${q(fst.file)}, "rows": ${fst.rows}$bytes$rid$pv, "cols": [$cols]}"""
-      }.mkString(", ") + "]"
-    val ts = if (m.ts >= 0L) s""""ts": ${m.ts}, """ else ""
-    s"""{"version": ${m.version}, "checkpoint": ${m.checkpoint}, """ +
-      s""""writer_id": ${q(m.writerId)}, "batch_id": ${m.batchId}, $ts""" +
-      s""""files": [${m.files.map(q).mkString(", ")}]""" +
-      s"""$removes$dvs$eqdels$eqdrops$branch$adopts$nrid$schema$pcols$changes$props$cmap$tokens$stats}"""
-  }
-
-  // scanner-style parse of our own renders (this code is both the only
-  // writer and the only reader of the format — exact-shape parsing is
-  // the robust choice, not a limitation). Fields are consumed with a
-  // CURSOR in render order, so key-shaped text inside the writer_id
-  // STRING VALUE (a public-API input) can never be mistaken for the
-  // batch_id/files keys that follow it — a document-wide indexOf
-  // would let one adversarial token brick every future read.
-  private def parse(s: String): Manifest = {
-    def keyFrom(k: String, from: Int): Int = {
-      val i = s.indexOf("\"" + k + "\": ", from)
-      require(i >= 0, s"manifest missing key $k after $from: $s")
-      i + k.length + 4
-    }
-    def longAt(i: Int): (Long, Int) = {
-      val j = s.indexWhere(c => c == ',' || c == '}', i) match {
-        case -1 => s.length; case x => x
-      }
-      (s.substring(i, j).trim.toLong, j)
-    }
-    // scan one escaped JSON string starting at the opening quote;
-    // returns (value, index after closing quote)
-    def scanString(from: Int): (String, Int) = {
-      require(s(from) == '"', s"expected string at $from: $s")
-      val b = new StringBuilder; var i = from + 1
-      while (s(i) != '"') {
-        if (s(i) == '\\') {
-          s(i + 1) match {
-            case 'n' => b += '\n'; i += 2
-            case 'u' =>
-              b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-            case c => b += c; i += 2
-          }
-        } else { b += s(i); i += 1 }
-      }
-      (b.toString, i + 1)
-    }
-    val (version, c1) = longAt(keyFrom("version", 0))
-    val cCp = keyFrom("checkpoint", c1)
-    val checkpoint = s.startsWith("true", cCp)
-    val (writerId, c2) = scanString(keyFrom("writer_id", cCp))
-    val (batchId, c3x) = longAt(keyFrom("batch_id", c2))
-    val (ts, c3) =
-      if (s.startsWith(", \"ts\": ", c3x)) longAt(c3x + 8)
-      else (-1L, c3x)
-    def strArray(from: Int): (Seq[String], Int) = {
-      var i = s.indexOf('[', from) + 1
-      val out = Seq.newBuilder[String]
-      while (s(i) != ']') {
-        if (s(i) == '"') {
-          val (v, j) = scanString(i); out += v; i = j
-        } else i += 1
-      }
-      (out.result(), i + 1)
-    }
-    val (files, cFiles) = strArray(keyFrom("files", c3))
-    // optional trailing keys (manifests from before each feature simply
-    // lack them). Detected by EXACT shape at the cursor — an indexOf
-    // would let key-shaped text inside a later string-typed zone-map
-    // bound (arbitrary table data) be mistaken for the key itself.
-    val (removes, cRem0) =
-      if (s.startsWith(", \"removes\": ", cFiles)) strArray(cFiles + 13)
-      else (Seq.empty[String], cFiles)
-    val (dvs, cRem) =
-      if (s.startsWith(", \"dvs\": ", cRem0)) {
-        var i = s.indexOf('[', cRem0 + 9) + 1
-        val out = Seq.newBuilder[DvEntry]
-        while (s(i) != ']') {
-          if (s(i) == '{') {
-            val (fv, i1) = scanString(keyFrom("f", i))
-            val (pv, i2) = scanString(keyFrom("p", i1))
-            val (nv, i3) = longAt(keyFrom("n", i2))
-            out += DvEntry(fv, pv, nv); i = i3
-          } else i += 1
-        }
-        (out.result(), i + 1)
-      } else (Seq.empty[DvEntry], cRem0)
-    val (eqdels, cEq0) =
-      if (s.startsWith(", \"eqdels\": ", cRem)) {
-        var i = s.indexOf('[', cRem + 12) + 1
-        val out = Seq.newBuilder[EqDelEntry]
-        while (s(i) != ']') {
-          if (s(i) == '{') {
-            val (pv, i1) = scanString(keyFrom("p", i))
-            val (cv, i2) = strArray(keyFrom("cols", i1))
-            val (nv, i3) = longAt(keyFrom("n", i2))
-            out += EqDelEntry(pv, cv, nv); i = i3
-          } else i += 1
-        }
-        (out.result(), i + 1)
-      } else (Seq.empty[EqDelEntry], cRem)
-    val (eqdrops, cEq) =
-      if (s.startsWith(", \"eqdrops\": ", cEq0)) strArray(cEq0 + 13)
-      else (Seq.empty[String], cEq0)
-    val (branch, cBr) =
-      if (s.startsWith(", \"branch\": ", cEq)) {
-        val (v, j) = scanString(cEq + 12); (Some(v), j)
-      } else (None, cEq)
-    val (adopts, cAd) =
-      if (s.startsWith(", \"adopts\": ", cBr)) {
-        var i = s.indexOf('[', cBr + 12) + 1
-        val out = Seq.newBuilder[Long]
-        while (s(i) != ']') {
-          if (s(i).isDigit) {
-            var j = i
-            while (s(j).isDigit) j += 1
-            out += s.substring(i, j).toLong; i = j
-          } else i += 1
-        }
-        (out.result(), i + 1)
-      } else (Seq.empty[Long], cBr)
-    val (nrid, cNr) =
-      if (s.startsWith(", \"nrid\": ", cAd)) longAt(cAd + 10)
-      else (-1L, cAd)
-    val (schemaDdl, cSch0) =
-      if (s.startsWith(", \"schema\": ", cNr)) {
-        val (v, j) = scanString(cNr + 12); (Some(v), j)
-      } else (None, cNr)
-    val (pcols, cPc) =
-      if (s.startsWith(", \"pcols\": ", cSch0)) strArray(cSch0 + 11)
-      else (Seq.empty[String], cSch0)
-    val (changes, cChg) =
-      if (s.startsWith(", \"changes\": ", cPc)) strArray(cPc + 13)
-      else (Seq.empty[String], cPc)
-    // {"k":…,"v":…} object arrays share one scanner shape with tokens
-    def kvArray(from: Int, k1: String, k2: String): (Seq[(String, String)], Int) = {
-      var i = s.indexOf('[', from) + 1
-      val out = Seq.newBuilder[(String, String)]
-      while (s(i) != ']') {
-        if (s(i) == '{') {
-          val (a, i1) = scanString(keyFrom(k1, i))
-          val (b, i2) = scanString(keyFrom(k2, i1))
-          out += ((a, b)); i = i2
-        } else i += 1
-      }
-      (out.result(), i + 1)
-    }
-    val (props, cPr) =
-      if (s.startsWith(", \"props\": ", cChg)) {
-        val (kv, c) = kvArray(cChg + 11, "k", "v")
-        (Some(kv), c)
-      } else (None, cChg)
-    val (cmap, cSch) =
-      if (s.startsWith(", \"cmap\": ", cPr)) {
-        val (pairs, c1) = kvArray(keyFrom("m", cPr), "l", "p")
-        val (retired, c2) = strArray(keyFrom("r", c1))
-        // past the object's closing '}'
-        (Some(ColMap(pairs, retired)), s.indexOf('}', c2) + 1)
-      } else (None, cPr)
-    val (tokens, cTok) =
-      if (s.startsWith(", \"tokens\": ", cSch)) {
-        var i = s.indexOf('[', cSch + 12) + 1
-        val out = Seq.newBuilder[(String, Long)]
-        while (s(i) != ']') {
-          if (s(i) == '{') {
-            val (w, i1) = scanString(keyFrom("w", i))
-            val (b, i2) = longAt(keyFrom("b", i1))
-            out += ((w, b)); i = i2
-          } else i += 1
-        }
-        (out.result(), i + 1)
-      } else (Seq.empty[(String, Long)], cSch)
-    val stats: Seq[TxStats.FileStats] = {
-      import TxStats.{ColStat, FileStats}
-      val k = if (s.startsWith(", \"stats\": ", cTok)) cTok + 2 else -1
-      if (k < 0) Seq.empty
-      else {
-        def parseCols(from: Int): (Seq[ColStat], Int) = {
-          var i = s.indexOf('[', from) + 1
-          val out = Seq.newBuilder[ColStat]
-          while (s(i) != ']') {
-            if (s(i) == '{') {
-              val (c, i1) = scanString(keyFrom("c", i))
-              val (t, i2) = scanString(keyFrom("t", i1))
-              val (h, i3) = scanString(keyFrom("h", i2))
-              val (mn, i4) = scanString(keyFrom("min", i3))
-              val (mx, i5) = scanString(keyFrom("max", i4))
-              val (n, i6) = longAt(keyFrom("n", i5))
-              val (kmv, i7) =
-                if (s.startsWith(", \"kmv\": ", i6)) {
-                  val (csv, j) = scanString(i6 + 9)
-                  (csv.split(',').toSeq.filter(_.nonEmpty).map(_.toLong), j)
-                } else (Seq.empty[Long], i6)
-              val (exact, i8) =
-                if (s.startsWith(", \"x\": ", i7)) {
-                  val (v, j) = scanString(i7 + 7)
-                  (v == "1", j)
-                } else (false, i7)
-              out += ColStat(c, t, h == "1", mn, mx, n, kmv, exact)
-              i = i8 // at the col object's '}'
-            } else i += 1
-          }
-          (out.result(), i + 1)
-        }
-        var i = s.indexOf('[', k + 8) + 1
-        val out = Seq.newBuilder[FileStats]
-        while (s(i) != ']') {
-          if (s(i) == '{') {
-            val (fn, i1) = scanString(keyFrom("f", i))
-            val (rows, i2) = longAt(keyFrom("rows", i1))
-            val (bytes, i2b) =
-              if (s.startsWith(", \"bytes\": ", i2)) longAt(i2 + 11)
-              else (0L, i2)
-            val (rid, i2r) =
-              if (s.startsWith(", \"rid\": ", i2b)) longAt(i2b + 9)
-              else (-1L, i2b)
-            val (parts, i2c) =
-              if (s.startsWith(", \"pv\": ", i2r)) {
-                var j = s.indexOf('[', i2b + 8) + 1
-                val pv = Seq.newBuilder[(String, String)]
-                while (s(j) != ']') {
-                  if (s(j) == '{') {
-                    val (c, j1) = scanString(keyFrom("c", j))
-                    val (v, j2) = scanString(keyFrom("v", j1))
-                    pv += ((c, v)); j = j2
-                  } else j += 1
-                }
-                (pv.result(), j + 1)
-              } else (Seq.empty[(String, String)], i2r)
-            val (cols, i3) = parseCols(i2c)
-            out += FileStats(fn, rows, cols, bytes, parts, firstRowId = rid)
-            i = i3 // just past the cols ']', at the file object's '}'
-          } else i += 1
-        }
-        out.result()
-      }
-    }
-    Manifest(version, files, writerId, batchId, checkpoint, stats, removes,
-      schemaDdl, tokens, pcols, changes, props, ts, dvs, cmap, eqdels, eqdrops,
-      branch, adopts, nrid)
-  }
-
   /** Session-scoped PARSED-MANIFEST cache. A committed manifest file is
-    * immutable by protocol ([[putIfAbsent]] never rewrites a version
+    * immutable by protocol ([[publish]] never rewrites a version
     * slot), so its parse can be reused for the life of the JVM. Entries
     * are keyed by the manifest's full path and validated against the
     * CURRENT listing's (length, modTime) — a log wiped and recreated at
@@ -537,42 +223,36 @@ object TxLog {
   private val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Manifest)]()
 
-  /** Test/maintenance seam: drop every cached parse (or one table's). */
-  private[graft] def invalidateManifestCache(table: String = null): Unit =
-    if (table == null) manifestCache.clear()
-    else {
-      val prefix = new Path(table, LogDir).toString
-      manifestCache.keySet.removeIf(_.startsWith(prefix))
-    }
-
   /** EVERY committed manifest, version-ordered — main-lineage, live
     * branch and foreign (dropped-branch) alike. State derivation never
     * reads this directly ([[manifests]] filters to a lineage); the raw
     * listing is for version ALLOCATION (the shared linear log is the
     * CAS arbiter for every lineage), vacuum (which must see every
-    * lineage's references) and the lineage builders themselves. */
+    * lineage's references) and the lineage builders themselves. A
+    * manifest that does not decode (torn, truncated, hand-edited) fails
+    * the whole read, naming its path and version: no manifest is ever
+    * skipped or half-read, and the failure is not cached. */
   private[storage] def allManifests(s: SparkSession, table: String): Seq[Manifest] = {
-    val dir = new Path(table, LogDir)
-    val f = fs(s, dir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir)
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("v") && n.endsWith(".json")
-      }.sortBy(_.getPath.getName)
-      .map { st =>
-        val key = st.getPath.toString
-        val hit = manifestCache.get(key)
-        if (hit != null && hit._1 == st.getLen &&
-            hit._2 == st.getModificationTime) hit._3
-        else {
-          val in = f.open(st.getPath)
-          val bytes = try in.readAllBytes() finally in.close()
-          val m = parse(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-          manifestCache.put(key, (st.getLen, st.getModificationTime, m))
-          m
-        }
-      }.toSeq
+    val f = fs(s, new Path(table, LogDir))
+    manifestFiles(s, table).map { st =>
+      val key = st.getPath.toString
+      val hit = manifestCache.get(key)
+      if (hit != null && hit._1 == st.getLen &&
+          hit._2 == st.getModificationTime) hit._3
+      else {
+        val in = f.open(st.getPath)
+        val bytes = try in.readAllBytes() finally in.close()
+        val m =
+          try TxJson.decodeManifest(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+          catch {
+            case e: Exception => throw new IllegalStateException(
+              s"corrupt txlog manifest ${st.getPath} (version " +
+                s"${versionOf(st)}): ${e.getMessage}", e)
+          }
+        manifestCache.put(key, (st.getLen, st.getModificationTime, m))
+        m
+      }
+    }
   }
 
   /** The MAIN lineage: unlabeled manifests plus every branch manifest a
@@ -653,16 +333,34 @@ object TxLog {
     * part of main at fork time and replay as always. */
   private[storage] def branchLineage(all: Seq[Manifest], name: String,
                                      table: String): Seq[Manifest] = {
-    val main = mainLineage(all)
-    val base = branchesFrom(propsFrom(main)).getOrElse(name,
-      throw new IllegalArgumentException(
-        s"no such branch '$name' on $table (live: " +
-          s"${branchesFrom(propsFrom(main)).keys.toSeq.sorted.mkString(", ")})"))
+    val base = branchBase(propsFrom(mainLineage(all)), name, table)
     val adopted = all.iterator.filter(_.branch.isEmpty).flatMap(_.adopts).toSet
     mainLineage(all.filter(_.version <= base)) ++
       all.filter(m => m.branch.contains(name) && m.version > base &&
         !adopted(m.version))
   }
+
+  /** The fork base of live branch `name`; refused loudly, naming the
+    * live branches, when there is no such branch. */
+  private def branchBase(props: Map[String, String], name: String,
+                         table: String): Long = {
+    val live = branchesFrom(props)
+    live.getOrElse(name, throw new IllegalArgumentException(
+      s"no such branch '$name' on $table (live: ${live.keys.toSeq.sorted.mkString(", ")})"))
+  }
+
+  /** Branch BOOKKEEPING (another branch's create/drop): the only main
+    * commits past a branch's base that leave it descending from main.
+    * Structural trust, as everywhere: `branch-` is a reserved writer
+    * prefix and this library is the format's only writer. A NON-EMPTY
+    * `adopts` is row-changing: another branch's fast-forward injected
+    * its rows into main (possibly at versions BELOW this branch's
+    * base), even though the ff manifest itself carries no files. */
+  private def branchBookkeeping(m: Manifest): Boolean =
+    m.writerId.startsWith("branch-") && m.files.isEmpty &&
+      m.removes.isEmpty && m.dvs.isEmpty && m.eqdels.isEmpty &&
+      m.eqdrops.isEmpty && m.adopts.isEmpty && !m.checkpoint &&
+      m.schema.isEmpty && m.cmap.isEmpty
 
   /** Metadata transactions that write MAIN-lineage-global records
     * (properties, column mapping, maintenance) refuse inside
@@ -677,14 +375,8 @@ object TxLog {
     * stream/CDF contiguity checks use this to tell "vacuum truncated
     * the range" (loud) from "that version belongs to another lineage"
     * (serve nothing): name-based, no manifest is opened. */
-  private[storage] def logVersions(s: SparkSession, table: String): Set[Long] = {
-    val dir = new Path(table, LogDir)
-    val f = fs(s, dir)
-    if (!f.exists(dir)) Set.empty
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong).toSet
-  }
+  private[storage] def logVersions(s: SparkSession, table: String): Set[Long] =
+    manifestFiles(s, table).map(versionOf).toSet
 
   /** CREATE a branch forked from MAIN's current head: one property CAS
     * (`graft.branch.<name>` → base). The stage-validate-publish
@@ -700,33 +392,21 @@ object TxLog {
       s"branch name '$name' must be [A-Za-z0-9._-]+")
     require(!name.equalsIgnoreCase("main"),
       "branch name 'main' would shadow the main lineage")
-    var attempt = 0
-    while (attempt < 20) {
-      val all = allManifests(s, table)
+    // the base re-derives per attempt, so a lost CAS race forks from
+    // the TRUE head — a stale base would let same-name manifests of a
+    // dropped predecessor pollute the new lineage
+    var base = -1L
+    commitMetadata(s, table, s"createBranch('$name')") { (all, v) =>
       require(all.nonEmpty, s"not a txlog table: $table")
       val main = mainLineage(all)
       val props = propsFrom(main)
       require(!branchesFrom(props).contains(name),
         s"branch '$name' already exists on $table (fastForward or dropBranch it)")
-      // the base re-derives per attempt, so a lost CAS race forks from
-      // the TRUE head — a stale base would let same-name manifests of
-      // a dropped predecessor pollute the new lineage
-      val base = main.last.version
-      val merged = (props + (BranchPropPrefix + name -> base.toString)).toSeq.sorted
-      val v = all.last.version + 1
-      val root = new Path(table)
-      val f = fs(s, root)
-      val logDir = new Path(root, LogDir)
-      val bytes = render(Manifest(v, Seq.empty,
-        writerId = s"branch-create-${java.util.UUID.randomUUID()}", batchId = 0L,
-        checkpoint = false, props = Some(merged), ts = commitTimeMs()))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (putIfAbsent(f, logDir, new Path(logDir, manifestName(v)), bytes))
-        return base
-      attempt += 1
+      base = main.last.version
+      Some(metadataManifest(v, "branch-create",
+        props + (BranchPropPrefix + name -> base.toString)))
     }
-    throw new IllegalStateException(
-      s"createBranch('$name') on $table lost 20 version races")
+    base
   }
 
   /** DROP a branch: the property goes, the branch's commits become
@@ -734,34 +414,19 @@ object TxLog {
     * sweep). Idempotent — dropping an absent branch is a no-op. */
   def dropBranch(s: SparkSession, table: String, name: String): Long = {
     guardMainOnly("dropBranch")
-    var attempt = 0
-    while (attempt < 20) {
-      val all = allManifests(s, table)
+    commitMetadata(s, table, s"dropBranch('$name')") { (all, v) =>
       require(all.nonEmpty, s"not a txlog table: $table")
       val props = propsFrom(mainLineage(all))
-      if (!branchesFrom(props).contains(name)) return -1L
-      val merged = (props - (BranchPropPrefix + name)).toSeq.sorted
-      val v = all.last.version + 1
-      val root = new Path(table)
-      val f = fs(s, root)
-      val logDir = new Path(root, LogDir)
+      if (!branchesFrom(props).contains(name)) None
       // record the rid HIGH-WATER in the drop manifest: the dropped
       // branch's commits become FOREIGN and vacuum collects them on age
       // alone — if they held the highest minted ranges, a post-sweep
       // commit would re-mint ids consumers captured from the branch
       // before the drop. The drop manifest is main-lineage and survives
       // (or is absorbed by) every checkpoint, so the water holds.
-      val bytes = render(Manifest(v, Seq.empty,
-        writerId = s"branch-drop-${java.util.UUID.randomUUID()}", batchId = 0L,
-        checkpoint = false, props = Some(merged), ts = commitTimeMs(),
-        nextRid = nextRowId(all)))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (putIfAbsent(f, logDir, new Path(logDir, manifestName(v)), bytes))
-        return v
-      attempt += 1
+      else Some(metadataManifest(v, "branch-drop", props - (BranchPropPrefix + name))
+        .copy(nextRid = nextRowId(all)))
     }
-    throw new IllegalStateException(
-      s"dropBranch('$name') on $table lost 20 version races")
   }
 
   /** FAST-FORWARD main to the branch: one main manifest ADOPTS the
@@ -774,27 +439,12 @@ object TxLog {
     * ff commit's version. */
   def fastForward(s: SparkSession, table: String, name: String): Long = {
     guardMainOnly("fastForward")
-    var attempt = 0
-    while (attempt < 20) {
-      val all = allManifests(s, table)
+    commitMetadata(s, table, s"fastForward('$name')") { (all, v) =>
       require(all.nonEmpty, s"not a txlog table: $table")
       val main = mainLineage(all)
       val props = propsFrom(main)
-      val base = branchesFrom(props).getOrElse(name,
-        throw new IllegalArgumentException(
-          s"no such branch '$name' on $table (live: " +
-            s"${branchesFrom(props).keys.toSeq.sorted.mkString(", ")})"))
-      // structural trust, as everywhere: `branch-` is a reserved
-      // writer prefix and this library is the format's only writer.
-      // A NON-EMPTY `adopts` is row-changing bookkeeping: another
-      // branch's fast-forward injected its rows into main (possibly at
-      // versions BELOW this branch's base) — main's row set diverged
-      // even though the ff manifest itself carries no files.
-      main.filter(_.version > base).find(m =>
-          !(m.writerId.startsWith("branch-") && m.files.isEmpty &&
-            m.removes.isEmpty && m.dvs.isEmpty && m.eqdels.isEmpty &&
-            m.eqdrops.isEmpty && m.adopts.isEmpty && !m.checkpoint &&
-            m.schema.isEmpty && m.cmap.isEmpty))
+      val base = branchBase(props, name, table)
+      main.find(m => m.version > base && !branchBookkeeping(m))
         .foreach(m => throw new java.util.ConcurrentModificationException(
           s"cannot fast-forward $table to branch '$name': main moved at " +
             s"v${m.version} (${m.writerId}) past the base v$base — the " +
@@ -803,23 +453,46 @@ object TxLog {
       val adopted = all.iterator.filter(_.branch.isEmpty).flatMap(_.adopts).toSet
       val adopts = all.filter(m => m.branch.contains(name) &&
         m.version > base && !adopted(m.version)).map(_.version)
-      val merged = (props - (BranchPropPrefix + name)).toSeq.sorted
-      val v = all.last.version + 1
-      val root = new Path(table)
-      val f = fs(s, root)
-      val logDir = new Path(root, LogDir)
-      val bytes = render(Manifest(v, Seq.empty,
-        writerId = s"branch-ff-${java.util.UUID.randomUUID()}", batchId = 0L,
-        checkpoint = false, props = Some(merged), ts = commitTimeMs(),
-        adopts = adopts))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (putIfAbsent(f, logDir, new Path(logDir, manifestName(v)), bytes))
-        return v
-      attempt += 1
+      Some(metadataManifest(v, "branch-ff", props - (BranchPropPrefix + name))
+        .copy(adopts = adopts))
+    }
+  }
+
+  /** One METADATA-ONLY transaction (properties, branch bookkeeping) as
+    * an optimistic CAS loop. Each attempt takes ONE listing, so the
+    * state `next` reads and the version slot `v` it publishes into come
+    * from the same instant — a successful put proves the read was
+    * current (the slot is allocated GLOBALLY: branch commits share the
+    * log). `next` returns the manifest to publish at `v`, or None when
+    * there is nothing to commit (-1). A lost slot race re-lists and
+    * re-derives, so concurrent updates compose instead of
+    * last-writer-wins. Returns the published version. */
+  private def commitMetadata(s: SparkSession, table: String, op: String)(
+      next: (Seq[Manifest], Long) => Option[Manifest]): Long = {
+    val root = new Path(table)
+    val f = fs(s, root)
+    val logDir = new Path(root, LogDir)
+    var last = -1L
+    for (_ <- 0 until 20) {
+      val all = allManifests(s, table)
+      val v = all.lastOption.map(_.version).getOrElse(-1L) + 1
+      next(all, v) match {
+        case None => return -1L
+        case Some(m) =>
+          if (publish(f, logDir, m)) return v
+          last = v
+      }
     }
     throw new IllegalStateException(
-      s"fastForward('$name') on $table lost 20 version races")
+      s"$op on $table lost 20 version races (last tried v$last)")
   }
+
+  /** A metadata-only manifest at `v` recording the full property map. */
+  private def metadataManifest(v: Long, writerPrefix: String,
+                               props: Map[String, String]): Manifest =
+    Manifest(v, Seq.empty, writerId = s"$writerPrefix-${java.util.UUID.randomUUID()}",
+      batchId = 0L, checkpoint = false, props = Some(props.toSeq.sorted),
+      ts = commitTimeMs())
 
   /** The branch's current contents — sugar for
     * `onBranch(name)(snapshot(s, table))`. */
@@ -952,18 +625,11 @@ object TxLog {
       require(all.nonEmpty, s"not a txlog table: $table")
       val main = mainLineage(all)
       val props = propsFrom(main)
-      val base = branchesFrom(props).getOrElse(name,
-        throw new IllegalArgumentException(
-          s"no such branch '$name' on $table (live: " +
-            s"${branchesFrom(props).keys.toSeq.sorted.mkString(", ")})"))
-      // divergence = any non-bookkeeping main commit past the base
-      // (same predicate as fastForward's) — without it, delegate: a
-      // true fast-forward is strictly better (history adoption)
-      val diverged = main.filter(_.version > base).filterNot(m =>
-        m.writerId.startsWith("branch-") && m.files.isEmpty &&
-          m.removes.isEmpty && m.dvs.isEmpty && m.eqdels.isEmpty &&
-          m.eqdrops.isEmpty && m.adopts.isEmpty && !m.checkpoint &&
-          m.schema.isEmpty && m.cmap.isEmpty)
+      val base = branchBase(props, name, table)
+      // divergence = any non-bookkeeping main commit past the base —
+      // without it, delegate: a true fast-forward is strictly better
+      // (history adoption)
+      val diverged = main.filter(m => m.version > base && !branchBookkeeping(m))
       if (diverged.isEmpty) return fastForward(s, table, name)
       require(props.get(IsolationProp).contains(IsolationWriteSerializable),
         s"mergeBranch('$name') on $table: main diverged past the base " +
@@ -1083,15 +749,14 @@ object TxLog {
       // branch-internal churn files can hold the highest minted ranges
       // with no surviving stats — the marker makes the high-water
       // locally durable instead of resting on sweep/checkpoint ordering
-      val bytes = render(Manifest(v, mergedFiles,
+      val m = Manifest(v, mergedFiles,
         writerId = s"branch-merge-${java.util.UUID.randomUUID()}", batchId = 0L,
         checkpoint = false, stats = stats, removes = mergedRemoves,
         schema = Some(schemaDdl), tokens = tokens, changes = changes,
         props = Some(merged), ts = commitTimeMs(), dvs = mergedDvs,
-        nextRid = nextRowId(all)))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        nextRid = nextRowId(all))
       beforeCommit() // crash/interleave injection seam
-      if (putIfAbsent(f, logDir, new Path(logDir, manifestName(v)), bytes))
+      if (publish(f, logDir, m))
         return v
       attempt += 1
     }
@@ -1560,17 +1225,10 @@ object TxLog {
     * parsed, so a streaming source's idle poll (`getOffset` every
     * trigger) costs one directory listing, not O(log) small-file reads.
     * Sound because versions are the zero-padded file names and
-    * [[putIfAbsent]] only ever publishes complete files (staging uses
+    * [[publish]] only ever publishes complete files (staging uses
     * `.tmp-` names the filter drops). */
-  private[storage] def headVersionByName(s: SparkSession, table: String): Long = {
-    val dir = new Path(table, LogDir)
-    val f = fs(s, dir)
-    if (!f.exists(dir)) -1L
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .foldLeft(-1L)(math.max)
-  }
+  private[storage] def headVersionByName(s: SparkSession, table: String): Long =
+    manifestFiles(s, table).lastOption.map(versionOf).getOrElse(-1L)
 
   /** True iff a committed manifest carries this idempotence token —
     * directly, or absorbed into a checkpoint's token list (which is
@@ -2340,30 +1998,9 @@ object TxLog {
         TxGen.validateDeclared(s, sch, colMapFrom(msG), set))
     }
     guardMainOnly("setProperties")
-    var last = -1L
-    var attempt = 0
-    while (attempt < 20) {
-      // ONE listing: the props read and the version slot come from the
-      // same instant, so a successful put proves the read was current
-      // (the slot is allocated GLOBALLY — branch commits share the log)
-      val all = allManifests(s, table)
-      val ms = mainLineage(all)
-      val merged = (propsFrom(ms) ++ set).toSeq.sorted
-      val v = all.lastOption.map(_.version).getOrElse(-1L) + 1
-      val root = new Path(table)
-      val f = fs(s, root)
-      val logDir = new Path(root, LogDir)
-      f.mkdirs(logDir)
-      val bytes = render(Manifest(v, Seq.empty,
-        writerId = s"props-${java.util.UUID.randomUUID()}", batchId = 0L,
-        checkpoint = false, props = Some(merged), ts = commitTimeMs()))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (putIfAbsent(f, logDir, new Path(logDir, manifestName(v)), bytes))
-        return v
-      attempt += 1; last = v // lost the slot race: re-merge on the new head
+    commitMetadata(s, table, "setProperties") { (all, v) =>
+      Some(metadataManifest(v, "props", propsFrom(mainLineage(all)) ++ set))
     }
-    throw new IllegalStateException(
-      s"setProperties of $table lost 20 version races (last tried v$last)")
   }
 
   /** Read-modify-write ONE property inside the CAS retry loop: `merge`
@@ -2379,29 +2016,12 @@ object TxLog {
   private[storage] def mergeProperty(s: SparkSession, table: String, key: String,
                                      merge: Option[String] => String): Long = {
     guardMainOnly("mergeProperty")
-    var attempt = 0
-    while (attempt < 20) {
-      val all = allManifests(s, table) // ONE listing: props + slot together
-      val ms = mainLineage(all)
-      val props = propsFrom(ms)
+    commitMetadata(s, table, s"mergeProperty($key)") { (all, v) =>
+      val props = propsFrom(mainLineage(all))
       val next = merge(props.get(key))
-      if (props.get(key).contains(next)) return -1L
-      val merged = (props + (key -> next)).toSeq.sorted
-      val v = all.lastOption.map(_.version).getOrElse(-1L) + 1
-      val root = new Path(table)
-      val f = fs(s, root)
-      val logDir = new Path(root, LogDir)
-      f.mkdirs(logDir)
-      val bytes = render(Manifest(v, Seq.empty,
-        writerId = s"props-${java.util.UUID.randomUUID()}", batchId = 0L,
-        checkpoint = false, props = Some(merged), ts = commitTimeMs()))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (putIfAbsent(f, logDir, new Path(logDir, manifestName(v)), bytes))
-        return v
-      attempt += 1 // lost the slot race: re-list, re-merge, retry
+      if (props.get(key).contains(next)) None
+      else Some(metadataManifest(v, "props", props + (key -> next)))
     }
-    throw new IllegalStateException(
-      s"mergeProperty($key) of $table lost 20 version races")
   }
 
   /** Drop `keys` from the table's properties as ONE metadata-only
@@ -2420,26 +2040,9 @@ object TxLog {
         "silently flip the column's pre-evolution reads from the default to " +
         "null) — DROP the column instead")
     guardMainOnly("removeProperties")
-    var attempt = 0
-    while (attempt < 20) {
-      val all = allManifests(s, table) // ONE listing: props + slot together
-      val ms = mainLineage(all)
-      val merged = (propsFrom(ms) -- keys).toSeq.sorted
-      val v = all.lastOption.map(_.version).getOrElse(-1L) + 1
-      val root = new Path(table)
-      val f = fs(s, root)
-      val logDir = new Path(root, LogDir)
-      f.mkdirs(logDir)
-      val bytes = render(Manifest(v, Seq.empty,
-        writerId = s"props-${java.util.UUID.randomUUID()}", batchId = 0L,
-        checkpoint = false, props = Some(merged), ts = commitTimeMs()))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (putIfAbsent(f, logDir, new Path(logDir, manifestName(v)), bytes))
-        return v
-      attempt += 1 // lost the slot race: re-merge on the new head
+    commitMetadata(s, table, "removeProperties") { (all, v) =>
+      Some(metadataManifest(v, "props", propsFrom(mainLineage(all)) -- keys))
     }
-    throw new IllegalStateException(
-      s"removeProperties of $table lost 20 version races")
   }
 
   /** Partition-column types with an UNAMBIGUOUS hive path form — the
@@ -2464,7 +2067,7 @@ object TxLog {
     * match the declared partitioning ([[commitPartitioned]]'s sticky
     * layout rule), evolution merges against the declared schema, and
     * `format("txlog")` reads of the empty table already know their
-    * columns. The commit point is the same [[putIfAbsent]] as every
+    * columns. The commit point is the same [[publish]] as every
     * other transaction, so two concurrent CREATEs of one path resolve
     * to exactly one winner (the loser gets the already-exists throw). */
   def createTable(s: SparkSession, table: String,
@@ -2500,15 +2103,13 @@ object TxLog {
     if (manifests(s, table).nonEmpty)
       throw new IllegalStateException(s"txlog table $table already exists")
     val logDir = new Path(root, LogDir)
-    f.mkdirs(logDir)
-    val bytes = render(Manifest(0L, rel,
+    val m = Manifest(0L, rel,
       writerId = s"create-${java.util.UUID.randomUUID()}", batchId = 0L,
       checkpoint = false, stats = assignRowIds(Seq.empty, rel, stats),
       schema = Some(ddlOf(schema)), pcols = partitionBy,
       props = if (props.isEmpty) None else Some(props.toSeq.sorted),
-      ts = commitTimeMs()))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if (!putIfAbsent(f, logDir, new Path(logDir, manifestName(0L)), bytes))
+      ts = commitTimeMs())
+    if (!publish(f, logDir, m))
       throw new IllegalStateException(s"txlog table $table already exists")
     0L
   }
@@ -2758,12 +2359,11 @@ object TxLog {
         if (reRendered.isEmpty) None
         else Some((props ++ reRendered).toSeq.sorted)
       val v = all.lastOption.map(_.version).getOrElse(-1L) + 1
-      val bytes = render(Manifest(v, Seq.empty,
+      val m = Manifest(v, Seq.empty,
         writerId = s"$widPrefix-${java.util.UUID.randomUUID()}", batchId = 0L,
         checkpoint = false, schema = Some(ddlOf(newSchema)),
-        cmap = Some(newCm), props = propsOut, ts = commitTimeMs()))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (putIfAbsent(f, logDir, new Path(logDir, manifestName(v)), bytes)) return v
+        cmap = Some(newCm), props = propsOut, ts = commitTimeMs())
+      if (publish(f, logDir, m)) return v
       attempt += 1
     }
     throw new IllegalStateException(
@@ -3421,7 +3021,6 @@ object TxLog {
     val root = new Path(table)
     val f = fs(s, root)
     val logDir = new Path(root, LogDir)
-    f.mkdirs(logDir)
     // branch-scoped commits ([[onBranch]]): data/DML/evolution commits
     // label their manifest with the branch; the operations that write
     // MAIN-LINEAGE-global metadata refuse — a checkpoint would replace
@@ -3581,34 +3180,37 @@ object TxLog {
         throw new IllegalArgumentException(
           s"column-mapping changes are main-lineage transactions — not " +
             s"allowed on branch '$b'"))
-      val target = new Path(logDir, manifestName(v))
       // ROW LINEAGE: this commit's files take the next id ranges —
       // re-allocated per attempt. A capture-bearing commit records the
       // attempt's base (`nrid`): `-i2` change entries resolve their
       // fresh-mint offsets against it at read ([[TxRowId.GoffCol]])
       val statsOut = assignRowIds(all, files, stats)
-      val bytes =
-        render(Manifest(v, files, writerId, batchId, checkpoint, statsOut,
+      val m =
+        Manifest(v, files, writerId, batchId, checkpoint, statsOut,
           schema = schemaDdl, pcols = pcols, ts = commitTimeMs(),
           cmap = cmapOut, props = propsOut, eqdels = eqdels,
           changes = changes, branch = currentBranch,
-          nextRid = if (changes.nonEmpty) nextRowId(all) else -1L))
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (putIfAbsent(f, logDir, target, bytes)) return v
+          nextRid = if (changes.nonEmpty) nextRowId(all) else -1L)
+      if (publish(f, logDir, m)) return v
       attempt += 1 // lost the version race; retry against the new head
     }
     throw new IllegalStateException(
       s"commit of $table lost $maxRetries version races — livelocked writer set?")
   }
 
-  /** THE commit point: publish `bytes` at `target` iff no file exists
-    * there — delegated to the scheme's [[LogStore]] arbiter (hard-link
-    * on file://, no-replace rename on HDFS-like stores, a registered
-    * conditional-put store on object stores — see [[LogStore]]). */
-  private def putIfAbsent(f: FileSystem, logDir: Path, target: Path,
-                          bytes: Array[Byte]): Boolean = {
+  /** THE commit point, and the only writer of manifests: render `m`
+    * and put it at its version slot (creating the log directory on a
+    * table's first commit) iff no file exists there —
+    * delegated to the scheme's [[LogStore]] arbiter (hard-link on
+    * file://, no-replace rename on HDFS-like stores, a registered
+    * conditional-put store on object stores — see [[LogStore]]).
+    * False = a concurrent committer took the slot. */
+  private def publish(f: FileSystem, logDir: Path, m: Manifest): Boolean = {
+    f.mkdirs(logDir)
+    val target = new Path(logDir, manifestName(m.version))
     val scheme = Option(target.toUri.getScheme).getOrElse(f.getUri.getScheme)
-    LogStore.forScheme(scheme).putIfAbsent(f, logDir, target, bytes)
+    LogStore.forScheme(scheme).putIfAbsent(f, logDir, target,
+      TxJson.encodeManifest(m).getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Exactly-once streaming sink: each micro-batch commits as ONE
@@ -4892,23 +4494,21 @@ object TxLog {
           captured = Some(c); c
         }
       val logDir = new Path(root, LogDir)
-      f.mkdirs(logDir)
       // ROW LINEAGE: allocation per attempt (rebases like the version
       // slot). A capture-bearing manifest records the attempt's base
       // (`nrid`) — the value `-i2` change entries resolve their
       // fresh-mint offsets against at read ([[TxRowId.GoffCol]])
       val statsOut = assignRowIds(allNow, rel, stats)
-      val bytes =
-        render(Manifest(v, rel, writerId, batchId, checkpoint = false, statsOut, removes,
+      val m =
+        Manifest(v, rel, writerId, batchId, checkpoint = false, statsOut, removes,
           // a rewrite reads through the table schema, so its output IS
           // the table schema — recorded verbatim (keeps evolved reads
           // O(0 inference) after DML), widened by any schema a rebased
           // concurrent append evolved in
           schema = Some(ddlOf(recorded)), changes = changes, ts = commitTimeMs(),
           dvs = dvs, eqdrops = eqdrops, branch = currentBranch,
-          nextRid = if (changes.nonEmpty) nextRowId(allNow) else -1L))
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (putIfAbsent(f, logDir, new Path(logDir, manifestName(v)), bytes))
+          nextRid = if (changes.nonEmpty) nextRowId(allNow) else -1L)
+      if (publish(f, logDir, m))
         return Rewrite(v, removes.size + dvs.size, rel.size)
       attempt += 1 // lost the slot race: re-list; serializable callers
                    // then see a moved head and conflict, rebasing ones retry
@@ -5398,7 +4998,6 @@ object TxLog {
     val root = new Path(table)
     val f = fs(s, root)
     val logDir = new Path(root, LogDir)
-    f.mkdirs(logDir)
     var base = expectedHead
     var carriedFiles = files
     var carriedStats = stats
@@ -5457,7 +5056,7 @@ object TxLog {
         statsOut.iterator.filter(_.firstRowId >= 0L)
           .map(st => st.firstRowId + math.max(st.rows, 0L))
           .foldLeft(0L)(math.max))
-      val bytes = render(Manifest(v, carriedFiles, writerId, batchId = 0L,
+      val m = Manifest(v, carriedFiles, writerId, batchId = 0L,
         checkpoint = true, statsOut, removes = removes, changes = changes,
         schema = carriedSchema.map(ddlOf), tokens = absorbed, nextRid = nrid,
         // the partition layout AND properties must SURVIVE log
@@ -5478,9 +5077,8 @@ object TxLog {
         ts = commitTimeMs(), dvs = dvs,
         // the column mapping must survive log truncation like pcols/
         // props; overwrite/restore override it (reset / as-of-v)
-        cmap = cmapOverride.getOrElse(colMapRecorded(ms))))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (putIfAbsent(f, logDir, new Path(logDir, manifestName(v)), bytes)) return v
+        cmap = cmapOverride.getOrElse(colMapRecorded(ms)))
+      if (publish(f, logDir, m)) return v
       attempt += 1 // lost the slot race; re-list and rebase again
     }
     throw new IllegalStateException(
