@@ -10,10 +10,11 @@ import graft.storage.TxLog
   * edits RETRACT index entries instead of poisoning them.
   *
   * The append-only loop ([[Dedup.dedupIngestionStream]]) assumes
-  * documents only ever arrive; under a curation pipeline (PII scrub,
-  * contamination removal, right-to-be-forgotten DML) the plain tail
-  * must fail and the bucketed index has no way to unlearn a document.
-  * Here BOTH tables are TxLog:
+  * documents only ever arrive: it admits each batch into a TxLog index
+  * but never retracts one. Under a curation pipeline (PII scrub,
+  * contamination removal, right-to-be-forgotten DML) documents change
+  * or leave, so the index must follow the corpus's changes. Here BOTH
+  * tables are TxLog:
   *
   *  - the corpus carries `changeFeed=true`, so every DML commits its
   *    row-level delta ([[TxLog]] change capture);

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.storage.TxLog
 import graft.text.TextAnalysis.tokens
 
 /** Deduplication operators for training-data pipelines, each designed for
@@ -441,13 +442,11 @@ object Dedup {
     * of the probe→admit ingestion loop: the batch's band rows APPEND to
     * the bucketed index table with the same bucket spec, so the next
     * micro-batch's probe sees this batch as corpus. Append keeps the
-    * bucket layout (each append adds one sorted file per bucket;
-    * [[graft.operators.StorageLayout.compact]] is the maintenance
-    * companion when small appended files accumulate). Lifecycle spec'd
-    * in StorageLayoutSpec: probe b1 → admit b1 → probe b2 finds
-    * b2×corpus AND b2×b1 pairs. NOTE: this append is a ONE-SHOT batch
-    * API — under at-least-once replay (foreachBatch restart) it
-    * double-appends; streaming ingestion must use
+    * bucket layout (each append adds one sorted file per bucket).
+    * Lifecycle spec'd in StorageLayoutSpec: probe b1 → admit b1 →
+    * probe b2 finds b2×corpus AND b2×b1 pairs. NOTE: this append is a
+    * ONE-SHOT batch API — under at-least-once replay (foreachBatch
+    * restart) it double-appends; streaming ingestion must use
     * [[bandIndexAdmitIdempotent]] / [[dedupIngestionStream]]. */
   def bandIndexAdmit(batch: DataFrame, table: String): Unit = {
     val s = batch.sparkSession
@@ -463,87 +462,68 @@ object Dedup {
   }
 
   // ------------------------------------- Exactly-once ingestion loop
-  /** [[bandIndexAdmit]] made REPLAY-IDEMPOTENT for at-least-once
-    * execution (foreachBatch replays a failed micro-batch with the same
-    * batch id): every admitted band row carries its `batch_id`, and a
-    * replayed admit appends exactly the rows the previous attempt did
-    * NOT publish (an anti-join on the batch's deterministic banding),
-    * so the converged state is always the complete batch, exactly once.
-    *
-    * Why repair instead of a presence-check skip: "batch_id present ⇔
-    * batch fully admitted" only holds if the job commit is atomic, and
-    * FileOutputCommitter's job commit is a SEQUENCE of driver-side file
-    * renames — a crash mid-job-commit publishes a SUBSET of the batch's
-    * band rows carrying the id. A skip-on-presence ledger would then
-    * permanently lose the unpublished rows (found by the r10 advisor).
-    * The anti-join sees precisely the published subset and appends the
-    * complement; banding is a pure deterministic function of the batch
-    * (seeded minhash), so replay recomputes identical rows, and a crash
-    * mid-REPAIR just leaves a smaller complement for the next replay —
-    * convergent under arbitrarily many partial publishes. Crash-injected
-    * in IngestionRecoverySpec (partial-publish window included).
-    *
-    * Cost: the happy first-admit path is one stats-pruned emptiness
-    * probe (per-file batch_id min/max skips every file but a replayed
-    * batch's own); the anti-join only ever runs on a replay that finds
-    * prior rows. Reading the table inside its own append plan is fine —
-    * Spark forbids self-read only for Overwrite.
-    *
-    * Index tables for this API are SEPARATE from [[bandIndexAdmit]]'s
-    * (three columns vs four); the loop creates its own table. */
-  def bandIndexAdmitIdempotent(batch: DataFrame, table: String,
-                               batchId: Long): Unit = {
+  /** Writer id of the ingestion loop's admits: with the batch id it is
+    * the idempotence token that makes a replayed admit a no-op. */
+  private val BandIndexWriter = "band-ingest"
+
+  /** The index rows an admit of `batch` commits: (doc_old, band, bh,
+    * batch_id). Banding is a pure function of the batch (seeded
+    * minhash), so a replay recomputes identical rows. */
+  private[graft] def bandIndexRows(batch: DataFrame, batchId: Long): DataFrame = {
     val s = batch.sparkSession
     import s.implicits._
-    val banded = portableBanded(portableRaw(batch, Nil), Nil)
+    portableBanded(portableRaw(batch, Nil), Nil)
       .select($"doc_id".as("doc_old"), $"band", $"bh",
         lit(batchId).as("batch_id"))
-    def append(df: DataFrame): Unit = df.write
-      .bucketBy(BandIndexBuckets, "bh")
-      .sortBy("bh")
-      .format("parquet")
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .saveAsTable(table)
-    val published =
-      if (!s.catalog.tableExists(table)) None
-      else {
-        val p = s.table(table).filter($"batch_id" === batchId)
-          .select($"doc_old", $"band")
-        if (p.isEmpty) None else Some(p)
-      }
-    published match {
-      case None => append(banded)
-      case Some(p) =>
-        // (doc_old, band) uniquely keys a batch's band rows, so the
-        // complement of the published subset is exactly what's missing
-        val missing = banded.join(p, Seq("doc_old", "band"), "left_anti")
-        if (!missing.isEmpty) append(missing)
-    }
   }
 
-  /** [[bandIndexProbeBatch]] against the batch-id SNAPSHOT `batch_id <
-    * batchId` of an idempotent-admit index. The snapshot is what makes
-    * the probe→admit pair replay-STABLE: if a crash lands after this
-    * batch's own admit committed, the replayed probe still sees exactly
-    * the pre-batch index (its own band rows are filtered out by id), so
-    * the recomputed pairs are identical — without the filter a replay
-    * would self-join the batch against itself. Missing table = empty
-    * corpus = no pairs (batch 0 bootstraps the index). */
-  def bandIndexProbeBatchBefore(batch: DataFrame, table: String,
+  /** [[bandIndexAdmit]] made REPLAY-IDEMPOTENT for at-least-once
+    * execution (foreachBatch replays a failed micro-batch with the same
+    * batch id): the batch's band rows, each carrying its `batch_id`,
+    * commit to the [[graft.storage.TxLog]] table at `index` as ONE
+    * transaction under the ([[BandIndexWriter]], batchId) token. The
+    * manifest publish is atomic, so the index holds all of the batch or
+    * none of it, and a replay of a committed batch is a token no-op.
+    * Crash-injected in IngestionRecoverySpec. */
+  def bandIndexAdmitIdempotent(batch: DataFrame, index: String,
+                               batchId: Long): Unit = {
+    TxLog.commit(bandIndexRows(batch, batchId), index, BandIndexWriter, batchId)
+    ()
+  }
+
+  /** The batch's candidate pairs against the `batch_id < batchId`
+    * snapshot of the txlog index at `index`. The snapshot is what
+    * makes the probe→admit pair replay-STABLE: if a crash lands after
+    * this batch's own admit committed, the replayed probe still sees
+    * exactly the pre-batch index (its own band rows are filtered out by
+    * id), so the recomputed pairs are identical — without the filter a
+    * replay would self-join the batch against itself. The pushed
+    * `bh isin (...)` and `batch_id` filters prune index files by their
+    * zone maps. A missing log is an empty corpus, with no pairs (batch
+    * 0 bootstraps the index). */
+  def bandIndexProbeBatchBefore(batch: DataFrame, index: String,
                                 batchId: Long,
                                 isinMaxHashes: Int = ProbeIsinMaxHashes): DataFrame = {
     val s = batch.sparkSession
     import s.implicits._
     val banded = portableBanded(portableRaw(batch, Nil), Nil)
       .select($"doc_id".as("doc_new"), $"band", $"bh")
-    if (!s.catalog.tableExists(table))
+    if (TxLog.headVersion(s, index) < 0L)
       banded.select($"doc_new", $"doc_new".as("doc_old")).limit(0)
     else
       probeIndexAgainst(banded,
-        s.table(table).filter($"batch_id" < batchId)
+        s.read.format("txlog").load(index).filter($"batch_id" < batchId)
           .select($"doc_old", $"band", $"bh"),
         isinMaxHashes)
   }
+
+  /** Default maintenance cadence for the ingestion loop: every admit
+    * commits its own small files with band hashes spread across all of
+    * them, so probe latency decays in admitted batches
+    * (IndexMaintenanceSpec). Clustering every 16 admits bounds the live
+    * file count while amortizing the full-index rewrite over 16
+    * commits. */
+  val CompactEvery = 16
 
   /** The probe→admit ingestion loop as a real Structured Streaming
     * query with EXACTLY-ONCE output effects under at-least-once replay:
@@ -558,109 +538,30 @@ object Dedup {
     * seam (default no-op; it receives the batch so the spec can also
     * simulate an admit-then-crash window).
     *
-    * Index MAINTENANCE rides the loop (r10 carried this as a gap):
-    * every `compactEvery` admits, step (4) runs the bucket-preserving
-    * [[compactBandIndex]] — row-identical, ledger-preserving, so replay
-    * re-running it converges — and every batch begins by repairing a
-    * compaction that crashed between its DROP and RENAME
-    * ([[recoverBandIndexCompaction]]); both windows are crash-injected
-    * in IngestionRecoverySpec. */
-  /** Default compaction cadence for the ingestion loop: every admit
-    * appends ~one small file per bucket, so probe latency decays
-    * linearly in admitted batches (IndexMaintenanceSpec: 64 admits →
-    * 1400 files, 1.08 s probes; compacted → 16 files, 0.33 s).
-    * Compacting every 16 admits bounds the per-bucket file count at
-    * ~17 while amortizing the full-index rewrite over 16 appends. */
-  val CompactEvery = 16
-
-  def dedupIngestionStream(stream: DataFrame, table: String,
+    * Index MAINTENANCE rides the loop: every `compactEvery` admits,
+    * step (4) re-clusters the index by `bh` ([[CuratedIndex.maintain]],
+    * one atomic checkpoint that keeps every row and absorbs the admit
+    * tokens). A crash inside it leaves the index as it was, and the
+    * replayed batch re-runs it — keyed on the batch id, so the policy
+    * is deterministic under replay. */
+  def dedupIngestionStream(stream: DataFrame, index: String,
                            pairsDir: String, checkpoint: String,
                            beforeAdmit: (DataFrame, Long) => Unit = (_, _) => (),
                            compactEvery: Int = CompactEvery)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val onBatch: (DataFrame, Long) => Unit = { (batch, id) =>
-      // self-heal a compaction that crashed between DROP and RENAME —
-      // without this, a restart would probe a "missing" table as an
-      // empty corpus and silently lose every prior admit
-      recoverBandIndexCompaction(batch.sparkSession, table)
-      bandIndexProbeBatchBefore(batch, table, id)
+      bandIndexProbeBatchBefore(batch, index, id)
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$pairsDir/batch_id=$id")
       beforeAdmit(batch, id)
-      bandIndexAdmitIdempotent(batch, table, id)
-      // maintenance rides the loop: bucket-preserving, row-identical,
-      // ledger (batch_id) preserved — so a replayed batch that re-runs
-      // compaction converges to the same contents. Keyed on batch id,
-      // so the policy is deterministic under replay.
+      bandIndexAdmitIdempotent(batch, index, id)
       if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-        compactBandIndex(batch.sparkSession, table)
+        CuratedIndex.maintain(batch.sparkSession, index)
     }
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch(onBatch)
       .start()
-  }
-
-  /** Bucket-PRESERVING compaction for the band index — the maintenance
-    * companion to sustained [[bandIndexAdmit]]/[[bandIndexAdmitIdempotent]]
-    * ingestion. Every admit appends one small file per (task, bucket),
-    * so after K batches each bucket holds ~K files and probe latency
-    * decays into file-open/footer overhead (measured in
-    * IndexMaintenanceSpec). [[graft.operators.StorageLayout.compact]]
-    * cannot be used here: it rewrites PLAIN parquet, which would strip
-    * the table's bucket layout and silently break the probe's
-    * SelectedBucketsCount pruning. This rewrite goes through the same
-    * bucketBy spec — pre-partitioned on the bucket column so each task
-    * holds exactly one bucket (Spark's repartition hash and bucket hash
-    * are both pmod-murmur3, so they agree) → ONE file per bucket — then
-    * swaps via DROP + RENAME. Same non-transactional caveat as
-    * compact(): a crash between drop and rename leaves the data under
-    * `<table>__compact`; Delta/Iceberg is the production answer.
-    * Returns (files before, files after). */
-  def compactBandIndex(s: SparkSession, table: String,
-                       afterDrop: () => Unit = () => ()): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    def fileCount(t: String): Int = {
-      val loc = s.sql(s"DESCRIBE EXTENDED $t")
-        .filter(col("col_name") === "Location")
-        .select(col("data_type")).head().getString(0)
-      val p = new Path(loc)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-    }
-    val before = fileCount(table)
-    val tmp = table + "__compact"
-    s.table(table)
-      .repartition(BandIndexBuckets, col("bh"))
-      .write
-      .bucketBy(BandIndexBuckets, "bh")
-      .sortBy("bh")
-      .format("parquet")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(tmp)
-    s.sql(s"DROP TABLE $table")
-    afterDrop() // IngestionRecoverySpec's injection seam (default no-op)
-    s.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    (before, fileCount(table))
-  }
-
-  /** Repair the DROP→RENAME window of a crashed [[compactBandIndex]]:
-    * if the index table is missing but `<table>__compact` exists, the
-    * crash happened between the two DDLs — the tmp table is COMPLETE by
-    * construction (the only code path that drops the live table runs
-    * after tmp's write committed), so renaming it IS the recovery. The
-    * converse (table present, tmp present) is a crash mid-tmp-write or
-    * pre-drop; the live table is intact and the next compaction's
-    * Overwrite subsumes the leftover. Called at the top of every
-    * [[dedupIngestionStream]] micro-batch, so a crashed compaction
-    * self-heals on restart before anything probes. Returns whether a
-    * repair happened. */
-  def recoverBandIndexCompaction(s: SparkSession, table: String): Boolean = {
-    val tmp = table + "__compact"
-    if (!s.catalog.tableExists(table) && s.catalog.tableExists(tmp)) {
-      s.sql(s"ALTER TABLE $tmp RENAME TO $table")
-      true
-    } else false
   }
 
   /** Shared probe tail: banded (doc_new, band, bh) rows against the
@@ -671,9 +572,9 @@ object Dedup {
     probeIndexAgainst(newBatch, newBatch.sparkSession.table(table), isinMaxHashes)
 
   /** [[probeIndexWith]] against an arbitrary index view — the seam the
-    * exactly-once loop uses to probe a batch-id SNAPSHOT of the index
-    * (the additional batch_id filter composes with the bucket prune:
-    * `bh` pruning still fires, batch_id prunes by file min/max stats). */
+    * exactly-once loop and [[CuratedIndex.probe]] use to probe a txlog
+    * index (there the pushed `bh` isin and the loop's `batch_id`
+    * snapshot filter prune index files by their zone maps). */
   private[dedup] def probeIndexAgainst(newBatch: DataFrame, index: DataFrame,
                                 isinMaxHashes: Int): DataFrame = {
     val s = newBatch.sparkSession

@@ -1,25 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** Storage-layout utilities for the 100 TB design target — the two
-  * levers that turn repeated full-table work into pruned/local work:
+/** Bucketed storage layout for the one-shot persisted indexes —
+  * persisting both sides of a recurring equi-join bucketed (and
+  * sorted) by the key makes the join shuffle-FREE: each task reads
+  * matching bucket files from both tables. At 100 TB the fact-fact
+  * shuffle is usually the single largest cost in a pipeline run;
+  * bucketing amortizes it into the write once.
   *
-  *  - BUCKETING: persisting both sides of a recurring equi-join bucketed
-  *    (and sorted) by the key makes the join shuffle-FREE — each task
-  *    reads matching bucket files from both tables. At 100 TB the fact-
-  *    fact shuffle is usually the single largest cost in a pipeline run;
-  *    bucketing amortizes it into the write once.
-  *
-  *  - PARTITIONED LAYOUT: directory partitioning on a coarse predicate
-  *    column (date, region) lets the scan prune entire directories at
-  *    plan time (`PartitionFilters` in explain) — the difference between
-  *    reading a day and reading a decade.
+  * The other table-maintenance levers (small-file compaction,
+  * partitioned layouts, z-order clustering and per-file stats) live in
+  * the transactional table log: [[graft.storage.TxLog]].
   *
   * Verified behavior (StorageLayoutSpec): bucketed self-equi-joins plan
-  * with zero Exchange operators; partitioned scans show pushed partition
-  * filters and touch only matching directories.
+  * with zero Exchange operators, and bucket-column lookups prune the
+  * scan to the matching bucket files.
   */
 object StorageLayout {
 
@@ -32,128 +28,6 @@ object StorageLayout {
       .format("parquet")
       .mode(SaveMode.Overwrite)
       .saveAsTable(table)
-
-  /** Persist `df` directory-partitioned by `partitionCol`. */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write
-      .partitionBy(partitionCol)
-      .format("parquet")
-      .mode(SaveMode.Overwrite)
-      .save(path)
-
-  /** Compact a small-files parquet directory into ~`targetBytes` output
-    * files — the standing maintenance job every long-lived 100 TB table
-    * needs: streaming/incremental appends accumulate K-sized part files,
-    * and scan cost degenerates to file-open cost (one task per file, NN
-    * pressure) long before data volume is the problem. Sizing is from the
-    * directory's actual on-disk bytes; `repartition` (round-robin) gives
-    * evenly-sized outputs. Returns (filesBefore, filesAfter). */
-  def compact(spark: SparkSession, path: String, targetBytes: Long): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parts = fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
-    val before = parts
-    val totalBytes = before.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val tmp = new Path(p.getParent, p.getName + "__compact_tmp")
-    val bak = new Path(p.getParent, p.getName + "__compact_bak")
-    // Hadoop FileSystem.rename/delete report failure by RETURNING FALSE,
-    // not throwing — every step below must be checked, or a failed swap
-    // would fall through to `fs.delete(bak)` and destroy the only copy.
-    // Fail fast on leftovers from a previously crashed run: the operator
-    // must never guess which of tmp/bak holds the good data.
-    require(!fs.exists(tmp), s"stale $tmp exists — clean up a prior crashed compact() first")
-    require(!fs.exists(bak), s"stale $bak exists — clean up a prior crashed compact() first")
-    spark.read.parquet(path).repartition(nOut)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // swap: atomic-enough for a maintenance window; a transactional table
-    // format (Delta/Iceberg) is the production answer at 100 TB
-    require(fs.rename(p, bak), s"rename $p -> $bak failed; original data untouched")
-    if (!fs.rename(tmp, p)) {
-      // roll back so the table path is valid again, then abort
-      val rolledBack = fs.rename(bak, p)
-      throw new IllegalStateException(
-        s"rename $tmp -> $p failed; rollback ${if (rolledBack) "succeeded" else s"ALSO FAILED — data is at $bak"}")
-    }
-    if (!fs.delete(bak, true))
-      throw new IllegalStateException(s"compacted data swapped in OK, but deleting backup $bak failed — remove it manually")
-    (before.length, parts.length)
-  }
-
-  /** Morton (Z-order) interleave of two non-negative int columns —
-    * bit 2i of the result is bit i of `a`, bit 2i+1 is bit i of `b`.
-    * Composed from codegen'd shift/mask expressions (no UDF). Sorting a
-    * table by z-value clusters BOTH dimensions into every file, so
-    * file-level min/max stats prune multi-dimensional box predicates —
-    * the technique behind Delta's OPTIMIZE ZORDER / Iceberg sort
-    * orders. A linear (a, b) sort clusters only the prefix dimension:
-    * every file spans the full b-range and a b-only or box predicate
-    * scans everything. Demonstrated with measured file-skipping counts
-    * in ZOrderSpec. */
-  def zvalue(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-             bits: Int = 16): org.apache.spark.sql.Column =
-    (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
-      acc
-        .bitwiseOR(shiftleft(shiftrightunsigned(a.cast("long"), i).bitwiseAND(1L), 2 * i))
-        .bitwiseOR(shiftleft(shiftrightunsigned(b.cast("long"), i).bitwiseAND(1L), 2 * i + 1))
-    }
-
-  /** Persist `df` z-ordered on (`dimA`, `dimB`): range-partition by the
-    * interleaved z-value, sort within partitions, one parquet file per
-    * range — every file then covers a compact z-curve segment, i.e. a
-    * small box in (a, b) space, and its min/max stats prune box queries
-    * on EITHER OR BOTH dims. */
-  def writeZOrdered(df: DataFrame, path: String, dimA: String, dimB: String,
-                    numFiles: Int, bits: Int = 16): Unit = {
-    // zvalue drops bits above `bits`, which would make out-of-range dims
-    // COLLIDE (a=0 and a=2^bits interleave identically) and silently
-    // degrade the clustering to full scans — fail fast instead. One
-    // extra bounds aggregate at write time is standard stats-collection
-    // cost for a layout rewrite.
-    val bound = 1L << bits
-    val b = df.agg(min(col(dimA).cast("long")), max(col(dimA).cast("long")),
-      min(col(dimB).cast("long")), max(col(dimB).cast("long"))).head
-    // empty input (or an all-null dim) yields null aggregates — getLong
-    // would NPE; fail with the real reason instead
-    require((0 to 3).forall(i => !b.isNullAt(i)),
-      s"z-order write needs non-empty input with non-null $dimA/$dimB " +
-        s"(got min/max = ${(0 to 3).map(i => if (b.isNullAt(i)) "null" else b.getLong(i).toString).mkString(",")})")
-    require(b.getLong(0) >= 0 && b.getLong(1) < bound &&
-      b.getLong(2) >= 0 && b.getLong(3) < bound,
-      s"z-order dims must lie in [0, $bound): " +
-        s"$dimA=[${b.getLong(0)},${b.getLong(1)}] $dimB=[${b.getLong(2)},${b.getLong(3)}]" +
-        " — rescale/bucket the dims or raise `bits`")
-    df.withColumn("_z", zvalue(col(dimA), col(dimB), bits))
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Per-file (min, max) stats of `dim` over a parquet directory — the
-    * file-pruning metadata a table format (Delta/Iceberg) would keep in
-    * its manifest; used to measure how many files a stats-based reader
-    * must scan for a predicate. */
-  def fileStats(spark: SparkSession, path: String, dims: Seq[String])
-      : Seq[(String, Map[String, (Long, Long)])] = {
-    import org.apache.spark.sql.Row
-    val agg = dims.flatMap(d =>
-      Seq(min(col(d)).cast("long").as(s"min_$d"), max(col(d)).cast("long").as(s"max_$d")))
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(agg.head, agg.tail: _*)
-      .collect()
-      .map { (r: Row) =>
-        r.getString(0) -> dims.zipWithIndex.map { case (d, i) =>
-          // a file whose dim is entirely null has null min/max — surface
-          // that as a named error, not a bare NPE from getLong
-          require(!r.isNullAt(1 + 2 * i) && !r.isNullAt(2 + 2 * i),
-            s"file ${r.getString(0)}: dim $d has null min/max (all-null column?)")
-          d -> (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))
-        }.toMap
-      }.toSeq
-  }
 
   /** True iff the executed plan of `df` contains no shuffle exchange of
     * any flavor (hash, range, or single-partition — BroadcastExchange is

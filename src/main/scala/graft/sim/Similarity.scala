@@ -134,65 +134,52 @@ object Similarity {
   }
 
   // ------------------------- Exactly-once embedding ingestion (r11)
+  /** Writer id of the embedding loop's admits: with the batch id it is
+    * the idempotence token that makes a replayed admit a no-op. */
+  private val LshIndexWriter = "lsh-ingest"
+
+  /** The index rows an admit of `batch` commits: (vec_id, label, v,
+    * norm, bucket, batch_id), deterministic in the batch. */
+  private[graft] def lshIndexRows(batch: DataFrame, batchId: Long): DataFrame =
+    vcol(batch)
+      .withColumn("bucket", bucketCol(col("v")))
+      .select(col("vec_id"), col("label"), col("v"), col("norm"), col("bucket"),
+        lit(batchId).as("batch_id"))
+
   /** [[writeLshIndex]] made REPLAY-IDEMPOTENT for streaming embedding
     * ingestion — the [[graft.dedup.Dedup.bandIndexAdmitIdempotent]]
-    * pattern applied to the ANN index (the r10 verdict's carry-over):
-    * every admitted row carries its `batch_id`, and a replayed admit
-    * appends exactly the complement of what the crashed attempt
-    * published (anti-join on `vec_id`, which uniquely keys a batch's
-    * rows) — convergent under partial job commits, where a
-    * skip-on-presence ledger would permanently lose rows. The table is
-    * bucketed by the LSH bucket like the one-shot writer, so probes
-    * keep their shuffle-free index side. */
-  def lshIndexAdmitIdempotent(batch: DataFrame, table: String,
-                              batchId: Long,
-                              numBuckets: Int = 1 << NumPlanes): Unit = {
-    val s = batch.sparkSession
-    import s.implicits._
-    val rows = vcol(batch)
-      .withColumn("bucket", bucketCol(col("v")))
-      .select($"vec_id", $"label", $"v", $"norm", $"bucket",
-        lit(batchId).as("batch_id"))
-    def append(df: DataFrame): Unit = df.write
-      .bucketBy(numBuckets, "bucket")
-      .sortBy("bucket")
-      .format("parquet")
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .saveAsTable(table)
-    val published =
-      if (!s.catalog.tableExists(table)) None
-      else {
-        val p = s.table(table).filter($"batch_id" === batchId).select($"vec_id")
-        if (p.isEmpty) None else Some(p)
-      }
-    published match {
-      case None => append(rows)
-      case Some(p) =>
-        val missing = rows.join(p, Seq("vec_id"), "left_anti")
-        if (!missing.isEmpty) append(missing)
-    }
+    * pattern applied to the ANN index: the batch's rows, each carrying
+    * its `batch_id`, commit to the [[graft.storage.TxLog]] table at
+    * `index` as ONE transaction under the ([[LshIndexWriter]], batchId)
+    * token — all of the batch or none of it, and a replay of a
+    * committed batch is a token no-op. */
+  def lshIndexAdmitIdempotent(batch: DataFrame, index: String,
+                              batchId: Long): Unit = {
+    graft.storage.TxLog.commit(lshIndexRows(batch, batchId), index,
+      LshIndexWriter, batchId)
+    ()
   }
 
   /** Cosine candidates of an ARRIVING embedding batch against the
-    * `batch_id < batchId` snapshot of an idempotent-admit index — the
+    * `batch_id < batchId` snapshot of the txlog index at `index` — the
     * replay-stable probe ([[graft.dedup.Dedup.bandIndexProbeBatchBefore]]
     * argument): a replay after its own admit committed still sees
     * exactly the pre-batch index, so recomputed candidates are
     * identical. Home-bucket equi-join; the small arriving side
-    * broadcasts, the index side stays bucket-distributed on disk and
-    * never shuffles. Missing table = empty corpus (batch 0 bootstrap). */
-  def lshIndexProbeBatchBefore(batch: DataFrame, table: String,
+    * broadcasts. A missing log is an empty corpus (batch 0
+    * bootstrap). */
+  def lshIndexProbeBatchBefore(batch: DataFrame, index: String,
                                batchId: Long): DataFrame = {
     val s = batch.sparkSession
     import s.implicits._
     val q = vcol(batch).withColumn("bucket", bucketCol(col("v")))
       .select($"bucket", $"vec_id".as("vec_new"),
         $"v".as("qv"), $"norm".as("qnorm"))
-    if (!s.catalog.tableExists(table))
+    if (graft.storage.TxLog.headVersion(s, index) < 0L)
       q.select($"vec_new", $"vec_new".as("vec_old"),
         lit(0.0).as("cos_sim")).limit(0)
     else
-      s.table(table).filter($"batch_id" < batchId)
+      s.read.format("txlog").load(index).filter($"batch_id" < batchId)
         .join(broadcast(q), "bucket")
         .select($"vec_new", $"vec_id".as("vec_old"),
           (dot($"qv", $"v") / ($"qnorm" * $"norm")).as("cos_sim"))
@@ -206,17 +193,18 @@ object Similarity {
     * (idempotent sink), (3) admit via [[lshIndexAdmitIdempotent]].
     * Crash-injected in SimIngestionRecoverySpec across the same
     * windows as the band-index loop (probe/admit gap, post-admit,
-    * partial publish). `beforeAdmit` is the spec's injection seam. */
-  def simIngestionStream(stream: DataFrame, table: String,
+    * staged-but-unpublished admit). `beforeAdmit` is the spec's
+    * injection seam. */
+  def simIngestionStream(stream: DataFrame, index: String,
                          pairsDir: String, checkpoint: String,
                          beforeAdmit: (DataFrame, Long) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val onBatch: (DataFrame, Long) => Unit = { (batch, id) =>
-      lshIndexProbeBatchBefore(batch, table, id)
+      lshIndexProbeBatchBefore(batch, index, id)
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$pairsDir/batch_id=$id")
       beforeAdmit(batch, id)
-      lshIndexAdmitIdempotent(batch, table, id)
+      lshIndexAdmitIdempotent(batch, index, id)
     }
     stream.writeStream
       .option("checkpointLocation", checkpoint)
@@ -794,10 +782,10 @@ object Similarity {
     * publish) leaves the index either without the batch or with all
     * of it, never partial (PqIngestionRecoverySpec crash-injects all
     * three windows and checks probe equality against the one-shot
-    * index). The TxLog data files are plain parquet — the
-    * cell-bucketed layout optimization stays with the one-shot
-    * [[writeIvfPqIndex]] table; a production variant would carry
-    * per-file cell ranges in the manifest for scan pruning. */
+    * index). The TxLog data files are plain parquet; the manifest
+    * zone maps carry each file's cell range, and
+    * [[graft.storage.TxLog.clusterBy]] on `cell` restores cell-pruned
+    * probe scans after sustained admits (PqIndexMaintenanceSpec). */
   def ivfPqIngestionStream(stream: DataFrame, indexDir: String,
                            cbTable: String, coarseTable: String,
                            checkpoint: String,

@@ -4,19 +4,18 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{assert_true, coalesce, col, input_file_name, lit, max, min, not, when}
 
-/** Minimal transactional table log — the missing atomicity primitive
-  * under every ingestion loop in this engine.
+/** Minimal transactional table log — the atomicity primitive under
+  * every ingestion loop in this engine (the band-index, LSH and IVF-PQ
+  * probe→admit loops, [[sink]], and the curated indexes).
   *
-  * The problem (documented at `Dedup.scala` bandIndexAdmitIdempotent
-  * and compactBandIndex): Spark's FileOutputCommitter publishes a job
-  * as a SEQUENCE of driver-side renames, so a crash mid-commit leaves
-  * a subset of the job's files visible — every sink built directly on
-  * a parquet directory inherits that window, and the ingestion loops
-  * work around it with anti-join repair or drop/rename caveats. The
-  * production answer is a log-structured table format (Delta/Iceberg);
-  * this is that answer's core, built from first principles on two
-  * filesystem facts: (1) files invisible to readers until referenced,
-  * (2) a single rename to a fresh name either happens or doesn't.
+  * The problem: Spark's FileOutputCommitter publishes a job as a
+  * SEQUENCE of driver-side renames, so a crash mid-commit leaves a
+  * subset of the job's files visible — every sink built directly on a
+  * parquet directory inherits that window. The production answer is a
+  * log-structured table format (Delta/Iceberg); this is that answer's
+  * core, built from first principles on two filesystem facts: (1)
+  * files invisible to readers until referenced, (2) a single rename to
+  * a fresh name either happens or doesn't.
   *
   * Layout of a TxLog table directory:
   * {{{
@@ -3220,10 +3219,9 @@ object TxLog {
     * replay a no-op iff the original commit published, so the table
     * holds every batch exactly once regardless of where a previous
     * attempt died (before the data write, between data write and
-    * publish, or after publish). This subsumes the per-sink
-    * idempotence machinery the direct-parquet loops carry
-    * (overwrite-partition sinks, anti-join repair): the sink is
-    * exactly-once for ANY DataFrame without knowing its key
+    * publish, or after publish). No per-sink idempotence machinery
+    * (overwrite-partition sinks, anti-join repair) is needed: the sink
+    * is exactly-once for ANY DataFrame without knowing its key
     * structure. `transform` maps each batch before it commits (e.g.
     * an index encode) and is covered by the same exactly-once
     * argument — it re-runs deterministically on replay and its output
@@ -4670,8 +4668,8 @@ object TxLog {
   /** Compact the live file set into ~targetBytes files and commit the
     * result as a CHECKPOINT manifest: one transaction that atomically
     * replaces the read set (snapshots at any instant see either the
-    * old files or the new — never a mix, unlike the in-place
-    * drop/rename compaction this replaces). Old files stay on disk for
+    * old files or the new — never a mix, unlike an in-place
+    * drop/rename swap). Old files stay on disk for
     * in-flight readers until `vacuum`. Returns the new version, or -1
     * on an empty table. */
   def compact(s: SparkSession, table: String, targetBytes: Long = 128L << 20,
@@ -5523,6 +5521,24 @@ object TxLog {
     afterParts.filter(f => stats.get(f).forall(st => ps.forall(TxStats.mayMatch(_, st))))
   }
 
+  /** Morton (Z-order) interleave of two non-negative int columns —
+    * bit 2i of the result is bit i of `a`, bit 2i+1 is bit i of `b`.
+    * Composed from codegen'd shift/mask expressions (no UDF). Sorting a
+    * table by z-value clusters BOTH dimensions into every file, so
+    * file-level min/max stats prune multi-dimensional box predicates —
+    * the technique behind Delta's OPTIMIZE ZORDER / Iceberg sort
+    * orders. A linear (a, b) sort clusters only the prefix dimension:
+    * every file spans the full b-range and a b-only or box predicate
+    * scans everything. File-skipping counts are pinned in TxSkipSpec. */
+  def zvalue(a: Column, b: Column, bits: Int = 16): Column = {
+    import org.apache.spark.sql.functions.{shiftleft, shiftrightunsigned}
+    (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
+      acc
+        .bitwiseOR(shiftleft(shiftrightunsigned(a.cast("long"), i).bitwiseAND(1L), 2 * i))
+        .bitwiseOR(shiftleft(shiftrightunsigned(b.cast("long"), i).bitwiseAND(1L), 2 * i + 1))
+    }
+  }
+
   /** OPTIMIZE ZORDER: transactionally re-layout the live file set
     * clustered on the z-curve of two numeric dims, committed as a
     * CHECKPOINT manifest — the same atomic read-set replacement as
@@ -5557,7 +5573,7 @@ object TxLog {
           floor((col(c).cast("double") - lo) / (hi - lo + 1e-300) * buckets)
             .cast("long")))
       }
-    val z = graft.operators.StorageLayout.zvalue(
+    val z = zvalue(
       scaled(dimA, b.get(0), b.get(1)), scaled(dimB, b.get(2), b.get(3)), bits)
     val out = df.withColumn("_z", z)
       .repartitionByRange(math.max(1, targetFiles), col("_z"))

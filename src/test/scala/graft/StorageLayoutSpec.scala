@@ -252,36 +252,4 @@ class StorageLayoutSpec extends AnyFunSuite {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
-
-  test("compact merges a small-files directory, preserving every row") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact_").resolve("t").toString
-    // 24 tiny part files — the post-streaming-append shape
-    Tables(spark, "/root/testdata/sf0.001", "orders").repartition(24)
-      .write.parquet(dir)
-    val before = Tables(spark, "/root/testdata/sf0.001", "orders").count()
-    val checksumBefore = spark.read.parquet(dir)
-      .agg(sum($"o_orderkey")).first().getLong(0)
-    val (nBefore, nAfter) = StorageLayout.compact(spark, dir, 1024 * 1024)
-    assert(nBefore == 24 && nAfter < nBefore, s"$nBefore -> $nAfter")
-    val after = spark.read.parquet(dir)
-    assert(after.count() == before)
-    assert(after.agg(sum($"o_orderkey")).first().getLong(0) == checksumBefore)
-  }
-
-  test("partitioned layout prunes directories at plan time") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("part_layout_").toString
-    val events = Tables(spark, "/root/testdata/sf0.001", "events")
-      .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
-    StorageLayout.writePartitioned(events, dir, "day")
-    val pruned = spark.read.parquet(dir).filter($"day" === "2024-01-05")
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(day"),
-      s"expected partition filters in:\n${plan.take(1500)}")
-    val allDays = spark.read.parquet(dir).select($"day").distinct().count()
-    assert(allDays > 10) // layout actually split by day
-    assert(pruned.count() > 0)
-    assert(pruned.select($"day").distinct().count() == 1)
-  }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.StorageLayout
 import graft.storage.TxLog
 
 /** Manifest zone maps + data skipping (TxLog.scanWhere / TxStats).
@@ -187,7 +186,7 @@ class TxSkipSpec extends AnyFunSuite {
       (col("id") / n).cast("long").as("x"),
       (col("id") % n).cast("long").as("y"),
       col("id").as("v"))
-    val z = grid.withColumn("_z", StorageLayout.zvalue(col("x"), col("y"), 6))
+    val z = grid.withColumn("_z", TxLog.zvalue(col("x"), col("y"), 6))
       .repartitionByRange(16, col("_z")).sortWithinPartitions("_z").drop("_z")
     TxLog.commit(z, t, "w", 0L)
     val (_, total) = TxLog.pruneCount(spark, t, lit(1) === lit(1))

@@ -3,75 +3,29 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.StorageLayout
+import graft.storage.TxLog
 
-/** Z-order layout: measured file-skipping evidence. The claim under
-  * test is the one that matters at 100 TB — a z-ordered layout's
-  * per-file min/max stats prune multi-dimensional box predicates that a
-  * linear sort cannot, because a linear (a, b) sort leaves every file
-  * spanning the full b-range. */
+/** The Morton (Z-order) interleave behind [[TxLog.cluster]]. The
+  * file-skipping it buys on a clustered table is pinned in TxSkipSpec
+  * ("z-ordered commits…" and "cluster (OPTIMIZE ZORDER)…"). */
 class ZOrderSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  val sf = "/root/testdata/sf0.01"
 
   test("zvalue interleaves bits (worked example + monotone on diagonal boxes)") {
     import spark.implicits._
     // a=3 (011), b=5 (101) → bits: a0,b0,a1,b1,a2,b2 = 1,1,1,0,0,1 → 0b100111 = 39
     val got = spark.range(1)
-      .select(StorageLayout.zvalue(lit(3), lit(5), 3).as("z"))
+      .select(TxLog.zvalue(lit(3), lit(5), 3).as("z"))
       .as[Long].head
     assert(got == 39L)
     // z of (0,0) is the global minimum; within a dyadic quadrant all
     // z-values are below those of the next quadrant (curve locality)
     val quad = spark.range(64).select(
       (col("id") % 8).as("a"), (col("id") / 8).cast("int").as("b"))
-      .select(StorageLayout.zvalue(col("a"), col("b"), 3).as("z"),
+      .select(TxLog.zvalue(col("a"), col("b"), 3).as("z"),
         (col("a") < 4 && col("b") < 4).as("q0"))
     val maxQ0 = quad.filter(col("q0")).agg(max("z")).as[Long].head
     val minQ3 = quad.filter(col("a") >= 4 && col("b") >= 4).agg(min("z")).as[Long].head
     assert(maxQ0 < minQ3)
-  }
-
-  test("z-ordered files prune 2-D box predicates that a linear sort scans in full") {
-    import spark.implicits._
-    // events projected onto a 64×64 grid: user bucket × minute-of-day bucket
-    val grid = Tables(spark, sf, "events").select(
-      ($"user_id" % 64).cast("int").as("ub"),
-      (floor((hour($"ts") * 60 + minute($"ts")) / 23)).cast("int").as("tb"))
-    val nFiles = 16
-    val base = java.nio.file.Files.createTempDirectory("zorder").toString
-    // linear layout: range by (ub, tb) — the "sorted table" baseline
-    grid.repartitionByRange(nFiles, $"ub", $"tb").sortWithinPartitions("ub", "tb")
-      .write.mode("overwrite").parquet(s"$base/linear")
-    StorageLayout.writeZOrdered(grid, s"$base/zorder", "ub", "tb", nFiles, 6)
-    def filesToScan(path: String, box: Map[String, (Long, Long)]): Int =
-      StorageLayout.fileStats(spark, path, Seq("ub", "tb")).count { case (_, stats) =>
-        box.forall { case (d, (lo, hi)) =>
-          val (mn, mx) = stats(d); mx >= lo && mn <= hi
-        }
-      }
-    // 2-D box: one dyadic quadrant cell (1/16 of the area)
-    val box = Map("ub" -> (16L, 31L), "tb" -> (16L, 31L))
-    val linear = filesToScan(s"$base/linear", box)
-    val zorder = filesToScan(s"$base/zorder", box)
-    // linear layout: ub-prefix prunes, but every kept file spans all tb
-    // values — the box constrains tb for free only under z-order
-    info(s"2-D box files to scan: zorder=$zorder linear=$linear of $nFiles")
-    assert(zorder < linear,
-      s"z-order should scan fewer files: z=$zorder linear=$linear of $nFiles")
-    // and the z layout still prunes a single-dim predicate decently
-    val ubOnly = filesToScan(s"$base/zorder", Map("ub" -> (16L, 31L)))
-    assert(ubOnly < nFiles)
-    // the decisive case: a predicate on the SECONDARY dim alone. The
-    // linear (ub, tb) sort leaves tb unclustered — every file spans the
-    // full tb range and a stats reader scans ALL of them; z-order keeps
-    // tb clustered too and skips at least half
-    val tbBox = Map("tb" -> (16L, 31L))
-    val linearTb = filesToScan(s"$base/linear", tbBox)
-    val zorderTb = filesToScan(s"$base/zorder", tbBox)
-    info(s"tb-only files to scan: zorder=$zorderTb linear=$linearTb of $nFiles")
-    assert(linearTb == nFiles, s"linear layout unexpectedly clusters tb: $linearTb")
-    assert(zorderTb * 2 <= nFiles,
-      s"z-order should skip >=half on the secondary dim: $zorderTb of $nFiles")
   }
 }

@@ -10,25 +10,28 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.dedup.Dedup
+import graft.storage.TxLog
 
 /** Crash-recovery proof for the EXACTLY-ONCE probe→admit ingestion loop
-  * ([[Dedup.dedupIngestionStream]]): the loop is killed in BOTH
-  * at-least-once windows —
+  * ([[Dedup.dedupIngestionStream]]) over its TxLog index: the loop is
+  * killed in each at-least-once window —
   *
   *  1. between probe and admit (pairs written, index not yet extended);
   *  2. after the admit committed but before the checkpoint recorded the
   *     batch (the window a blind SaveMode.Append double-appends in);
-  *  3. MID-job-commit: only a SUBSET of the batch's band rows published
-  *     with the batch_id (FileOutputCommitter's job commit is a rename
-  *     sequence, not atomic) — the window where a skip-on-presence
-  *     ledger permanently loses the unpublished rows;
+  *  3. after the admit's data files were staged under `<index>/data/`
+  *     but before its manifest published — the files are orphans no
+  *     manifest names;
+  *  4. inside the in-loop maintenance, after [[TxLog.clusterBy]] staged
+  *     its rewrite but before its checkpoint published;
   *
   * restarted from its checkpoint, and must end with the index contents
-  * AND per-batch pair outputs of the crash-free run — byte-identical,
-  * no duplicated band rows, no self-pairs. Windows 2–3 are what
-  * [[Dedup.bandIndexAdmitIdempotent]]'s anti-join repair and
+  * (batch_id included) AND per-batch pair outputs of the crash-free run
+  * — no duplicated band rows, no self-pairs. Windows 2–4 are what the
+  * admit's (writer, batch id) token, the atomic manifest publish and
   * [[Dedup.bandIndexProbeBatchBefore]]'s `batch_id < id` snapshot
-  * exist for. */
+  * cover. (A partially published admit cannot happen: the manifest
+  * publish is one atomic put, so the batch's rows appear together.) */
 class IngestionRecoverySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -59,43 +62,31 @@ class IngestionRecoverySpec extends AnyFunSuite {
 
   private var runId = 0
 
-  /** Run the ingestion loop over the 3-batch source into fresh
-    * table/pairs/checkpoint. `crash`: invoked in the beforeAdmit seam
-    * (first attempt only — the driver rethrows into the stream, then we
-    * restart from the same checkpoint). `compactEvery` forwards to the
-    * loop's maintenance policy (default 0 = off, matching the baseline
-    * runs that predate in-loop compaction). Returns (index rows incl.
-    * batch_id, pairs rows per batch dir). */
-  private def run(crash: (DataFrame, Long) => Unit = null,
+  /** Run the ingestion loop over the 3-batch source into a fresh
+    * index/pairs/checkpoint. `crash(batch, id, index)`: invoked in the
+    * beforeAdmit seam (first attempt only — the driver rethrows into
+    * the stream, then we restart from the same checkpoint).
+    * `compactEvery` forwards to the loop's maintenance policy (default
+    * 0 = off). Returns (index rows incl. batch_id, pairs rows per batch
+    * dir). */
+  private def run(crash: (DataFrame, Long, String) => Unit = null,
                   compactEvery: Int = 0)
       : (Seq[String], Map[Long, Seq[String]]) = {
     runId += 1
     val (dir, schema) = streamFixture
-    val table = s"ingest_idx_$runId"
-    // self-heal after a killed JVM: the catalog forgets the managed
-    // table but its warehouse location survives, and the next run's
-    // CTAS dies on LOCATION_ALREADY_EXISTS — drop both sides first
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).toSeq.flatten.foreach(rm); f.delete(); ()
-      }
-      rm(loc)
-    }
+    val index = Files.createTempDirectory(s"ingest_idx_$runId").resolve("t").toString
     val pairsDir = Files.createTempDirectory(s"ingest_pairs_$runId").toString
     val ckpt = Files.createTempDirectory(s"ingest_ckpt_$runId").toString
     @volatile var crashed = false
     val hook: (DataFrame, Long) => Unit = { (df, id) =>
       if (crash != null && !crashed) {
-        try crash(df, id)
+        try crash(df, id, index)
         catch { case e: Throwable => crashed = true; throw e }
       }
     }
     def start() = Dedup.dedupIngestionStream(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir),
-      table, pairsDir, ckpt, hook, compactEvery)
+      index, pairsDir, ckpt, hook, compactEvery)
     val q1 = start()
     if (crash != null) {
       val ex = intercept[Throwable] { q1.processAllAvailable() }
@@ -109,13 +100,12 @@ class IngestionRecoverySpec extends AnyFunSuite {
     } else {
       try q1.processAllAvailable() finally q1.stop()
     }
-    val idx = spark.table(table)
+    val idx = TxLog.snapshot(spark, index).get
       .collect().map(_.toString).toSeq.sorted
     val pairs = (0L to 2L).map { id =>
       id -> spark.read.parquet(s"$pairsDir/batch_id=$id")
         .collect().map(_.toString).toSeq.sorted
     }.toMap
-    spark.sql(s"DROP TABLE IF EXISTS $table")
     (idx, pairs)
   }
 
@@ -127,6 +117,7 @@ class IngestionRecoverySpec extends AnyFunSuite {
     // three distinct batch ids in the index, all documents banded once
     val byBatch = idx.map(_.split(",").last.stripSuffix("]")).distinct
     assert(byBatch.sorted.toSeq == Seq("0", "1", "2"))
+    assert(idx.distinct.size == idx.size, "a band row was admitted twice")
     assert(pairs(0L).isEmpty, "batch 0 probes an empty corpus")
     pairs.values.flatten.foreach { p =>
       val Array(a, b) = p.stripPrefix("[").stripSuffix("]").split(",")
@@ -135,7 +126,7 @@ class IngestionRecoverySpec extends AnyFunSuite {
   }
 
   test("crash between probe and admit: restart restores identical index and pairs") {
-    val (idx, pairs) = run { (_, id) =>
+    val (idx, pairs) = run { (_, id, _) =>
       if (id == 1) sys.error("injected crash (between probe and admit)")
     }
     assert(idx == baseline._1, "index contents differ after recovery")
@@ -143,15 +134,13 @@ class IngestionRecoverySpec extends AnyFunSuite {
   }
 
   test("crash after admit committed: replay is a no-op admit, identical outputs") {
-    // simulate the worst window: the admit's job COMMITTED, then the
-    // driver died before the checkpoint advanced — the replayed batch
-    // must (a) probe the pre-batch snapshot (not see itself), (b) skip
-    // the already-committed admit instead of double-appending
-    var table: String = null
-    val (idx, pairs) = run { (df, id) =>
+    // simulate the worst window: the admit COMMITTED, then the driver
+    // died before the checkpoint advanced — the replayed batch must
+    // (a) probe the pre-batch snapshot (not see itself), (b) skip the
+    // already-committed admit instead of double-appending
+    val (idx, pairs) = run { (df, id, index) =>
       if (id == 1) {
-        table = s"ingest_idx_$runId"
-        Dedup.bandIndexAdmitIdempotent(df, table, id)
+        Dedup.bandIndexAdmitIdempotent(df, index, id)
         sys.error("injected crash (post-admit)")
       }
     }
@@ -160,46 +149,39 @@ class IngestionRecoverySpec extends AnyFunSuite {
     assert(pairs == baseline._2, "pair outputs differ after post-admit crash")
   }
 
-  test("crash MID-job-commit (partial band rows published): replay repairs the complement") {
-    // the advisor's window: the admit's job commit renamed SOME of the
-    // batch's files and died — band rows for a subset of the batch's
-    // docs are published under the real batch_id. A skip-on-presence
-    // ledger would lose the rest forever; the anti-join repair must
-    // append exactly the complement on replay.
-    val (idx, pairs) = run { (df, id) =>
+  test("crash after the admit's data files are staged, before its manifest publishes: orphans stay invisible") {
+    // the crashed attempt's band rows landed as data files under the
+    // index's data/ directory, but no manifest names them: the restart
+    // must neither read them nor skip the batch's real admit
+    val (idx, pairs) = run { (df, id, index) =>
       if (id == 1) {
-        val table = s"ingest_idx_$runId"
-        Dedup.bandIndexAdmitIdempotent(
-          df.filter(col("doc_id") % 2 === 0), table, id)
-        sys.error("injected crash (mid-job-commit, partial publish)")
+        Dedup.bandIndexRows(df, id).write.parquet(s"$index/data/orphan-batch$id")
+        sys.error("injected crash (staged, unpublished admit)")
       }
     }
     assert(idx == baseline._1,
-      "index differs — partial publish was not repaired (or was double-appended)")
-    assert(pairs == baseline._2, "pair outputs differ after partial-publish crash")
+      "index differs — orphaned admit files leaked in, or the admit was skipped")
+    assert(pairs == baseline._2, "pair outputs differ after a staged-admit crash")
   }
 
   test("compaction interleaved with ingestion: contents identical to the compaction-free run") {
-    // compact after every admit — the most aggressive interleaving the
-    // policy allows — and require byte-identical index contents AND
-    // probe pairs vs the never-compacted baseline
+    // cluster after every admit — the most aggressive interleaving the
+    // policy allows — and require identical index contents AND probe
+    // pairs vs the never-clustered baseline
     val (idx, pairs) = run(crash = null, compactEvery = 1)
     assert(idx == baseline._1, "in-loop compaction changed index contents")
     assert(pairs == baseline._2, "in-loop compaction changed probe pairs")
   }
 
-  test("crash DURING compaction (between DROP and RENAME): restart self-heals, identical outputs") {
-    // the non-transactional window compactBandIndex documents: live
-    // table dropped, complete rewrite stranded under __compact, driver
-    // dies. Without recoverBandIndexCompaction the restarted loop would
-    // probe a missing table as an EMPTY corpus and silently forget
-    // every prior admit — the worst failure mode in this file.
-    val (idx, pairs) = run { (df, id) =>
-      if (id == 1) {
-        val table = s"ingest_idx_$runId"
-        Dedup.compactBandIndex(df.sparkSession, table,
-          afterDrop = () => sys.error("injected crash (mid-compaction)"))
-      }
+  test("crash DURING compaction (clusterBy staged, checkpoint unpublished): restart converges, identical outputs") {
+    // the loop's maintenance rewrite died between staging its files and
+    // publishing its checkpoint: the index must read exactly as before
+    // the maintenance, and the replayed batch admits once
+    val (idx, pairs) = run { (_, id, index) =>
+      if (id == 1)
+        TxLog.clusterBy(spark, index, Seq("bh"), Dedup.BandIndexBuckets,
+          beforeCommit = () => sys.error("injected crash (mid-clusterBy)"))
+      ()
     }
     assert(idx == baseline._1, "index differs after mid-compaction crash recovery")
     assert(pairs == baseline._2, "pairs differ after mid-compaction crash recovery")

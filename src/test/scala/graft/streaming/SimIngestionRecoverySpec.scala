@@ -10,14 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.sim.Similarity
+import graft.storage.TxLog
 
 /** Crash-recovery proof for the EXACTLY-ONCE embedding ingestion loop
   * ([[Similarity.simIngestionStream]]) — the band-index recovery suite
-  * (IngestionRecoverySpec) applied to the ANN index. The loop is killed
-  * in the at-least-once windows (probe→admit gap; post-admit; MID-job-
-  * commit partial publish), restarted from its checkpoint, and must end
-  * with the index contents AND per-batch candidate outputs of the
-  * crash-free run. */
+  * (IngestionRecoverySpec) applied to the TxLog ANN index. The loop is
+  * killed in the at-least-once windows (probe→admit gap; post-admit;
+  * admit data files staged but its manifest unpublished), restarted
+  * from its checkpoint, and must end with the index contents AND
+  * per-batch candidate outputs of the crash-free run. */
 class SimIngestionRecoverySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -48,23 +49,24 @@ class SimIngestionRecoverySpec extends AnyFunSuite {
 
   private var runId = 0
 
-  private def run(crash: (DataFrame, Long) => Unit = null)
+  /** `crash(batch, id, index)` fires once from the beforeAdmit seam. */
+  private def run(crash: (DataFrame, Long, String) => Unit = null)
       : (Seq[String], Map[Long, Seq[String]]) = {
     runId += 1
     val (dir, schema) = streamFixture
-    val table = s"sim_ingest_idx_$runId"
+    val index = Files.createTempDirectory(s"sim_ingest_idx_$runId").resolve("t").toString
     val pairsDir = Files.createTempDirectory(s"sim_ingest_pairs_$runId").toString
     val ckpt = Files.createTempDirectory(s"sim_ingest_ckpt_$runId").toString
     @volatile var crashed = false
     val hook: (DataFrame, Long) => Unit = { (df, id) =>
       if (crash != null && !crashed) {
-        try crash(df, id)
+        try crash(df, id, index)
         catch { case e: Throwable => crashed = true; throw e }
       }
     }
     def start() = Similarity.simIngestionStream(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir),
-      table, pairsDir, ckpt, hook)
+      index, pairsDir, ckpt, hook)
     val q1 = start()
     if (crash != null) {
       val ex = intercept[Throwable] { q1.processAllAvailable() }
@@ -81,14 +83,13 @@ class SimIngestionRecoverySpec extends AnyFunSuite {
     // index rows: drop the float vector payload, compare identity
     // columns + batch ledger (v/norm determinism is covered by the
     // cos_sim comparison in the pairs)
-    val idx = spark.table(table)
+    val idx = TxLog.snapshot(spark, index).get
       .select(col("vec_id"), col("label"), col("bucket"), col("batch_id"))
       .collect().map(_.toString).toSeq.sorted
     val pairs = (0L to 2L).map { id =>
       id -> spark.read.parquet(s"$pairsDir/batch_id=$id")
         .collect().map(_.toString).toSeq.sorted
     }.toMap
-    spark.sql(s"DROP TABLE IF EXISTS $table")
     (idx, pairs)
   }
 
@@ -99,6 +100,7 @@ class SimIngestionRecoverySpec extends AnyFunSuite {
     assert(idx.nonEmpty)
     val byBatch = idx.map(_.split(",").last.stripSuffix("]")).distinct
     assert(byBatch.sorted.toSeq == Seq("0", "1", "2"))
+    assert(idx.distinct.size == idx.size, "a vector was admitted twice")
     assert(pairs(0L).isEmpty, "batch 0 probes an empty corpus")
     assert(pairs.values.flatten.nonEmpty, "vacuous: no candidates at all")
     pairs.values.flatten.foreach { p =>
@@ -108,7 +110,7 @@ class SimIngestionRecoverySpec extends AnyFunSuite {
   }
 
   test("crash between probe and admit: restart restores identical index and candidates") {
-    val (idx, pairs) = run { (_, id) =>
+    val (idx, pairs) = run { (_, id, _) =>
       if (id == 1) sys.error("injected crash (between probe and admit)")
     }
     assert(idx == baseline._1, "index contents differ after recovery")
@@ -116,9 +118,9 @@ class SimIngestionRecoverySpec extends AnyFunSuite {
   }
 
   test("crash after admit committed: replay is a no-op admit, identical outputs") {
-    val (idx, pairs) = run { (df, id) =>
+    val (idx, pairs) = run { (df, id, index) =>
       if (id == 1) {
-        Similarity.lshIndexAdmitIdempotent(df, s"sim_ingest_idx_$runId", id)
+        Similarity.lshIndexAdmitIdempotent(df, index, id)
         sys.error("injected crash (post-admit)")
       }
     }
@@ -127,16 +129,15 @@ class SimIngestionRecoverySpec extends AnyFunSuite {
     assert(pairs == baseline._2, "candidates differ after post-admit crash")
   }
 
-  test("crash MID-job-commit (partial rows published): replay repairs the complement") {
-    val (idx, pairs) = run { (df, id) =>
+  test("crash after the admit's data files are staged, before its manifest publishes: orphans stay invisible") {
+    val (idx, pairs) = run { (df, id, index) =>
       if (id == 1) {
-        Similarity.lshIndexAdmitIdempotent(
-          df.filter(col("vec_id") % 2 === 0), s"sim_ingest_idx_$runId", id)
-        sys.error("injected crash (mid-job-commit, partial publish)")
+        Similarity.lshIndexRows(df, id).write.parquet(s"$index/data/orphan-batch$id")
+        sys.error("injected crash (staged, unpublished admit)")
       }
     }
     assert(idx == baseline._1,
-      "index differs — partial publish was not repaired (or was double-appended)")
-    assert(pairs == baseline._2, "candidates differ after partial-publish crash")
+      "index differs — orphaned admit files leaked in, or the admit was skipped")
+    assert(pairs == baseline._2, "candidates differ after a staged-admit crash")
   }
 }
