@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,9 +27,12 @@ final case class EtlMetrics(files: Long, valid: Long, invalid: Long)
   * Everything up to the sinks is one Catalyst plan over the cached
   * validated scan — parse (from_json), validation (UDF), routing
   * (filters), transforms (built-in Columns) all pipeline in a single
-  * whole-stage-codegen pass per branch; no shuffle anywhere (the sort for
-  * divergence D1's deterministic order is the only exchange, and only in
-  * fidelity mode).
+  * whole-stage-codegen pass per branch. The counters job and the sink
+  * jobs (error log with quarantine copy, payload CSV, v2 metadata CSV)
+  * each read that cached scan and write their own paths, so they run
+  * concurrently ([[ConcurrentActions]]). In scale mode the only exchange
+  * is the counters aggregate's partial→final step; fidelity mode adds
+  * the sorts for divergence D1's deterministic order.
   */
 object EntityPipeline {
 
@@ -64,42 +67,36 @@ object EntityPipeline {
     * pipeline's shape: it was always an incremental append. */
   def process(raw: DataFrame, conf: EntityConf, mode: EtlMode,
               errorLogFile: String, fidelity: Boolean = true): Result = {
+    if (mode == V2 && conf.metadataFile.isEmpty)
+      sys.error(s"v2 entity ${conf.name} needs metadata_file")
     val schema = SchemaCompiler.compile(conf.schemaFile)
     val validated = raw
       .withColumn("v", Validator.validateCol(schema)(col("value")))
       .withColumn("data", from_json(col("value"), schema.envelopeStruct))
       .cache()
 
-    // One job for both counters (map-side partial agg; also materializes
-    // the cache every downstream pass reuses).
-    val m = validated.agg(
-      count(lit(1)).as("files"),
-      count_if(col("v.errClass") === "ok").as("valid")).collect()(0)
-    val files = m.getLong(0)
-    val valid = m.getLong(1)
-    val invalid = files - valid
-
     // O6 error log + O7 quarantine. FIDELITY: one collect of the
     // invalid set in deterministic src_path order (D1) — the
     // reference-shaped single log file + driver NIO copy, sound because
     // fidelity mode already implies a driver-sized corpus. SCALE: both
-    // sinks stay executor-side (distributed text append, Hadoop-FS
-    // copy in foreachPartition) so a majority-invalid corpus — a bad
-    // upstream at 100 TB — flows through with bounded driver memory.
+    // sinks are one executor-side job: each task copies its rows' files
+    // (Hadoop FS) as the rows stream into the distributed text append, so
+    // a majority-invalid corpus — a bad upstream at 100 TB — flows
+    // through with bounded driver memory. `src_path` is unique per file,
+    // so no dedup is needed.
     val invalidDf = validated.filter(col("v.errClass") =!= "ok")
       .select(col("src_path"), col("v.errMsg").as("errMsg"))
-    if (fidelity) {
-      val invalidRows = invalidDf.orderBy("src_path").collect()
-      ErrorLogSink.append(
-        invalidRows.map(r => (r.getString(0), r.getString(1))).toIndexedSeq,
-        errorLogFile)
-      QuarantineSink.copyAll(invalidRows.map(_.getString(0)).distinct.toSeq,
-        conf.quarantineDir)
-    } else {
-      ErrorLogSink.appendDistributed(invalidDf, errorLogFile + ".d")
-      QuarantineSink.copyAllDistributed(invalidDf.select("src_path").distinct(),
-        conf.quarantineDir)
-    }
+    val errorSinks: () => Unit =
+      if (fidelity) () => {
+        val invalidRows = invalidDf.orderBy("src_path").collect()
+        ErrorLogSink.append(
+          invalidRows.map(r => (r.getString(0), r.getString(1))).toIndexedSeq,
+          errorLogFile)
+        QuarantineSink.copyAll(invalidRows.map(_.getString(0)).distinct.toSeq,
+          conf.quarantineDir)
+      }
+      else () => ErrorLogSink.appendDistributed(
+        QuarantineSink.copying(invalidDf, conf.quarantineDir), errorLogFile + ".d")
 
     // O5 routing: valid, plus recoverable-invalid when the
     // replace_missing_data gate is on. The recoverability test is the
@@ -119,24 +116,30 @@ object EntityPipeline {
     // fidelity: reference-faithful single growing CSV (driver-side
     // append); scale: distributed part-file append under <output>.d/ —
     // the cluster-shaped sink with no driver bottleneck.
-    def sink(df: DataFrame, outFile: String): Unit =
-      if (fidelity) CsvSink.appendFidelity(df, outFile)
-      else CsvSink.appendScale(df, outFile + ".d")
+    def sink(df: DataFrame, outFile: String): () => Unit =
+      if (fidelity) () => CsvSink.appendFidelity(df, outFile)
+      else () => CsvSink.appendScale(df, outFile + ".d")
 
-    mode match {
+    val csvSinks = mode match {
       case V1 =>
-        val out = project(emit, schema, schema.v1Columns, v2 = false)
-        sink(out, conf.outputFile)
+        Seq(sink(project(emit, schema, schema.v1Columns, v2 = false), conf.outputFile))
       case V2 =>
-        val out = project(emit, schema, schema.v2PayloadColumns, v2 = true)
-        sink(out, conf.outputFile)
-        val meta = projectMetadata(emit, schema)
-        sink(meta, conf.metadataFile.getOrElse(
-          sys.error(s"v2 entity ${conf.name} needs metadata_file")))
+        Seq(sink(project(emit, schema, schema.v2PayloadColumns, v2 = true), conf.outputFile),
+          sink(projectMetadata(emit, schema), conf.metadataFile.get))
     }
 
-    validated.unpersist()
-    Result(EtlMetrics(files, valid, invalid))
+    // Both counters in one map-side partial aggregate. It and every sink
+    // read the cached frame and write different paths, so they run as
+    // concurrent jobs; whichever job reaches a partition first caches it.
+    var counts: Row = null
+    val countersJob = () => counts = validated.agg(
+      count(lit(1)).as("files"),
+      count_if(col("v.errClass") === "ok").as("valid")).collect()(0)
+    try ConcurrentActions.runAll(countersJob +: errorSinks +: csvSinks)
+    finally validated.unpersist()
+    val files = counts.getLong(0)
+    val valid = counts.getLong(1)
+    Result(EtlMetrics(files, valid, files - valid))
   }
 
   /** O8/O9/O10-O13: flatten the envelope, apply transforms, stringify to

@@ -7,7 +7,7 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import java.util.Locale
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** O14 CSV sink. Two modes (SURVEY.md §4.3, §7.6):
@@ -63,7 +63,9 @@ object CsvSink {
   * single reference-shaped log file (driver-side by nature); SCALE
   * writes the same line format as a distributed text append under
   * `<logFile>.d/` — the invalid set never touches the driver, so a
-  * majority-invalid corpus (bad upstream) cannot OOM it. */
+  * majority-invalid corpus (bad upstream) cannot OOM it. The pipeline
+  * feeds it [[QuarantineSink.copying]]'s pass-through of the invalid
+  * rows, so one job writes the log and the quarantine copies. */
 object ErrorLogSink {
   private val fmt = DateTimeFormatter.ofPattern("dd/MM/yyyy hh:mm:ss a", Locale.ENGLISH)
 
@@ -98,10 +100,12 @@ object ErrorLogSink {
   * it on demand.
   *
   * FIDELITY mode keeps the reference's driver-side NIO copy over the
-  * collected (small) invalid list; SCALE mode ships the path list to the
-  * executors and copies through the Hadoop FileSystem API inside
-  * `foreachPartition` — file bytes and path lists both stay off the
-  * driver, and the FS abstraction covers local disk, HDFS, or object
+  * collected (small) invalid list. SCALE mode copies through the Hadoop
+  * FileSystem API inside the tasks: [[copying]] passes the invalid rows
+  * through unchanged and copies each row's file as it goes by, so the
+  * copy runs inside whichever job consumes the rows — in the pipeline,
+  * the error log's text append. File bytes and path lists both stay off
+  * the driver, and the FS abstraction covers local disk, HDFS, or object
   * stores alike (SURVEY §2.1 O7's named alternative). */
 object QuarantineSink {
   def copyAll(srcPaths: Seq[String], quarantineDir: String): Unit = {
@@ -113,29 +117,38 @@ object QuarantineSink {
     }
   }
 
-  /** srcPaths: single-string-column DataFrame of offending file paths
-    * (pre-deduplicated). Each task copies its partition's files; the
-    * Hadoop Configuration is rebuilt per task from defaults, which is
-    * correct for any FS reachable by URI from the executors. */
-  def copyAllDistributed(srcPaths: DataFrame, quarantineDir: String): Unit = {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.{FileUtil, Path => HPath}
-    val enc = org.apache.spark.sql.Encoders.STRING
-    srcPaths.as(enc).foreachPartition { (it: Iterator[String]) =>
-      if (it.hasNext) {
-        val conf = new Configuration()
-        val qd = new HPath(quarantineDir)
-        val qfs = qd.getFileSystem(conf)
-        // verbatim copy: no client-side .crc sidecars next to the
-        // quarantined files (no-op where checksums are FS-internal)
-        qfs.setWriteChecksum(false)
-        qfs.mkdirs(qd)
-        it.foreach { p =>
-          val src = new HPath(p)
-          FileUtil.copy(src.getFileSystem(conf), src,
-            qfs, new HPath(qd, src.getName), false, true, conf)
-        }
+  /** `df` unchanged, with the file named by each row's first column
+    * (a source path) copied into quarantineDir when the row passes
+    * through its task. A re-run task copies again, overwriting. */
+  private[etl] def copying(df: DataFrame, quarantineDir: String): DataFrame =
+    df.mapPartitions((it: Iterator[Row]) => copyEach(quarantineDir, it))(
+      Encoders.row(df.schema))
+
+  /** srcPaths: single-string-column DataFrame of offending file paths,
+    * copied in a job of their own. */
+  def copyAllDistributed(srcPaths: DataFrame, quarantineDir: String): Unit =
+    copying(srcPaths, quarantineDir).foreach((_: Row) => ())
+
+  /** The Hadoop Configuration is rebuilt per task from defaults, which is
+    * correct for any FS reachable by URI from the executors; an empty
+    * partition touches no file system. */
+  private def copyEach(quarantineDir: String, rows: Iterator[Row]): Iterator[Row] =
+    if (!rows.hasNext) rows
+    else {
+      import org.apache.hadoop.conf.Configuration
+      import org.apache.hadoop.fs.{FileUtil, Path => HPath}
+      val conf = new Configuration()
+      val qd = new HPath(quarantineDir)
+      val qfs = qd.getFileSystem(conf)
+      // verbatim copy: no client-side .crc sidecars next to the
+      // quarantined files (no-op where checksums are FS-internal)
+      qfs.setWriteChecksum(false)
+      qfs.mkdirs(qd)
+      rows.map { r =>
+        val src = new HPath(r.getString(0))
+        FileUtil.copy(src.getFileSystem(conf), src,
+          qfs, new HPath(qd, src.getName), false, true, conf)
+        r
       }
     }
-  }
 }

@@ -173,8 +173,8 @@ class EtlGoldenSpec extends AnyFunSuite {
     // a bad upstream at 100 TB means MOST records are invalid; scale
     // mode must flow them through the distributed sinks with no driver
     // collect of the invalid set (EntityPipeline routes fidelity=false
-    // to ErrorLogSink.appendDistributed + QuarantineSink
-    // .copyAllDistributed)
+    // to ErrorLogSink.appendDistributed over QuarantineSink.copying's
+    // pass-through of the invalid rows: one executor-side job)
     val base = Files.createTempDirectory("etl_scale_")
     EtlFixtures.writeCorpus(base)
     val users = base.resolve("users")

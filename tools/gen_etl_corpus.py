@@ -1,12 +1,18 @@
 # 20,000 single-event JSON files (10k users + 10k cards), seed 7,
 # 2% required-missing + 1% type-error per entity — the M3/M9/M15 recipe.
+# The schemas are the ETL fixtures' draft-07 user and card schemas, shared
+# with the benchmark's corpus generator.
+# usage: python3 tools/gen_etl_corpus.py <out_dir>
 import json, random, os, sys, shutil
+sys.dont_write_bytecode = True
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "perfbench"))
+from gen import USER_SCHEMA, CARD_SCHEMA
 base = sys.argv[1]
 random.seed(7)
 shutil.rmtree(base, ignore_errors=True)
 os.makedirs(f"{base}/users"); os.makedirs(f"{base}/cards")
-for f in ["user-events-schema.json", "card-events-schema.json"]:
-    shutil.copy(f"/root/reference/{f}", f"{base}/{f}")
+for f, schema in [("user-events-schema.json", USER_SCHEMA), ("card-events-schema.json", CARD_SCHEMA)]:
+    with open(f"{base}/{f}", "w") as fh: json.dump(schema, fh, indent=2)
 jobs = ["Commercial horticulturist", "Engineer, chemical", "Surveyor", "Teacher"]
 names = ["Lawrence Welch", "Dr. Troy Rosario", "Amy Chen MD", "Bob Lee Jr."]
 def uid(): return "%08x-%04x-%04x-%04x-%012x" % tuple(random.getrandbits(b) for b in (32,16,16,16,48))
