@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,9 +30,10 @@ final case class EtlMetrics(files: Long, valid: Long, invalid: Long)
   * whole-stage-codegen pass per branch. The counters job and the sink
   * jobs (error log with quarantine copy, payload CSV, v2 metadata CSV)
   * each read that cached scan and write their own paths, so they run
-  * concurrently ([[ConcurrentActions]]). In scale mode the only exchange
-  * is the counters aggregate's partial→final step; fidelity mode adds
-  * the sorts for divergence D1's deterministic order.
+  * concurrently ([[ConcurrentActions]]). The counters are per-partition
+  * sums added up on the driver, so scale mode has no exchange at all: an
+  * entity is four single-stage jobs in v2, three in v1. Fidelity mode
+  * adds the sorts for divergence D1's deterministic order.
   */
 object EntityPipeline {
 
@@ -77,10 +78,10 @@ object EntityPipeline {
 
     // O6 error log + O7 quarantine. FIDELITY: one collect of the
     // invalid set in deterministic src_path order (D1) — the
-    // reference-shaped single log file + driver NIO copy, sound because
+    // reference-shaped single log file + driver-side copy, sound because
     // fidelity mode already implies a driver-sized corpus. SCALE: both
     // sinks are one executor-side job: each task copies its rows' files
-    // (Hadoop FS) as the rows stream into the distributed text append, so
+    // as the rows stream into the distributed text append, so
     // a majority-invalid corpus — a bad upstream at 100 TB — flows
     // through with bounded driver memory. `src_path` is unique per file,
     // so no dedup is needed.
@@ -92,8 +93,8 @@ object EntityPipeline {
         ErrorLogSink.append(
           invalidRows.map(r => (r.getString(0), r.getString(1))).toIndexedSeq,
           errorLogFile)
-        QuarantineSink.copyAll(invalidRows.map(_.getString(0)).distinct.toSeq,
-          conf.quarantineDir)
+        QuarantineSink.copyAll(raw.sparkSession,
+          invalidRows.map(_.getString(0)).distinct.toSeq, conf.quarantineDir)
       }
       else () => ErrorLogSink.appendDistributed(
         QuarantineSink.copying(invalidDf, conf.quarantineDir), errorLogFile + ".d")
@@ -128,17 +129,22 @@ object EntityPipeline {
           sink(projectMetadata(emit, schema), conf.metadataFile.get))
     }
 
-    // Both counters in one map-side partial aggregate. It and every sink
-    // read the cached frame and write different paths, so they run as
-    // concurrent jobs; whichever job reaches a partition first caches it.
-    var counts: Row = null
-    val countersJob = () => counts = validated.agg(
-      count(lit(1)).as("files"),
-      count_if(col("v.errClass") === "ok").as("valid")).collect()(0)
+    // Both counters as one (files, valid) pair per partition, summed on
+    // the driver: one shuffle-free job, where an aggregate runs three
+    // under AQE (materialise the cache, map stage, result). It and every
+    // sink read the cached frame and write different paths, so they run
+    // as concurrent jobs; whichever job reaches a partition first caches it.
+    var counts = (0L, 0L)
+    val countersJob = () => counts = validated.select(col("v.errClass") === "ok")
+      .mapPartitions { (rows: Iterator[Row]) =>
+        var files, valid = 0L
+        rows.foreach { r => files += 1; if (r.getBoolean(0)) valid += 1 }
+        Iterator((files, valid))
+      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .collect().foldLeft((0L, 0L)) { case ((f, v), (pf, pv)) => (f + pf, v + pv) }
     try ConcurrentActions.runAll(countersJob +: errorSinks +: csvSinks)
     finally validated.unpersist()
-    val files = counts.getLong(0)
-    val valid = counts.getLong(1)
+    val (files, valid) = counts
     Result(EtlMetrics(files, valid, files - valid))
   }
 

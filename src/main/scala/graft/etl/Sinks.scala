@@ -7,8 +7,11 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import java.util.Locale
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, FileUtil, Path => HPath}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.GraftParquetIO
 
 /** O14 CSV sink. Two modes (SURVEY.md §4.3, §7.6):
   *
@@ -99,56 +102,84 @@ object ErrorLogSink {
   * each offending source file verbatim into the quarantine dir, creating
   * it on demand.
   *
-  * FIDELITY mode keeps the reference's driver-side NIO copy over the
-  * collected (small) invalid list. SCALE mode copies through the Hadoop
-  * FileSystem API inside the tasks: [[copying]] passes the invalid rows
-  * through unchanged and copies each row's file as it goes by, so the
-  * copy runs inside whichever job consumes the rows — in the pipeline,
-  * the error log's text append. File bytes and path lists both stay off
-  * the driver, and the FS abstraction covers local disk, HDFS, or object
-  * stores alike (SURVEY §2.1 O7's named alternative). */
+  * FIDELITY mode copies the collected (small) invalid list on the
+  * driver. SCALE mode copies inside the tasks: [[copying]] passes the
+  * invalid rows through unchanged and copies each row's file as it goes
+  * by, so the copy runs inside whichever job consumes the rows — in the
+  * pipeline, the error log's text append. File bytes and path lists both
+  * stay off the driver. Both modes copy through one [[Copier]], with the
+  * session's Hadoop configuration (shipped to the tasks), so a file
+  * system or credential set on the session reaches the copy.
+  *
+  * When the quarantine directory and the source both resolve to the
+  * local file system, the copy is `java.nio.file.Files.copy`; every other
+  * pair goes through Hadoop's `FileUtil.copy`, which covers HDFS and
+  * object stores (SURVEY §2.1 O7's named alternative). Without libhadoop,
+  * Hadoop's local file system sets the permission of every file and
+  * directory it creates by running a `chmod` process: one process per
+  * quarantined file. Measured on 4 vCPUs with the 30%-invalid corpus of
+  * the `etl_scale_dirty` benchmark, 60 field-missing files packed into
+  * one scan partition took 83–116 ms to copy through Hadoop and 0.6 ms
+  * through NIO, and that error-log task was an entity's critical path. */
 object QuarantineSink {
-  def copyAll(srcPaths: Seq[String], quarantineDir: String): Unit = {
-    if (srcPaths.nonEmpty) Files.createDirectories(Paths.get(quarantineDir))
-    srcPaths.foreach { p =>
-      val src: Path = Paths.get(p)
-      Files.copy(src, Paths.get(quarantineDir).resolve(src.getFileName),
-        StandardCopyOption.REPLACE_EXISTING)
+  def copyAll(spark: SparkSession, srcPaths: Seq[String], quarantineDir: String): Unit =
+    if (srcPaths.nonEmpty) {
+      val copier = new Copier(spark.sessionState.newHadoopConf(), quarantineDir)
+      srcPaths.foreach(copier.copy)
     }
-  }
 
   /** `df` unchanged, with the file named by each row's first column
     * (a source path) copied into quarantineDir when the row passes
-    * through its task. A re-run task copies again, overwriting. */
-  private[etl] def copying(df: DataFrame, quarantineDir: String): DataFrame =
-    df.mapPartitions((it: Iterator[Row]) => copyEach(quarantineDir, it))(
-      Encoders.row(df.schema))
+    * through its task. A re-run task copies again, overwriting. An
+    * empty partition touches no file system. */
+  private[etl] def copying(df: DataFrame, quarantineDir: String): DataFrame = {
+    val spark = df.sparkSession
+    val conf = spark.sparkContext.broadcast(
+      GraftParquetIO.serializableConf(spark.sessionState.newHadoopConf()))
+    df.mapPartitions { (rows: Iterator[Row]) =>
+      if (!rows.hasNext) rows
+      else {
+        val copier = new Copier(conf.value.value, quarantineDir)
+        rows.map { r => copier.copy(r.getString(0)); r }
+      }
+    }(Encoders.row(df.schema))
+  }
 
   /** srcPaths: single-string-column DataFrame of offending file paths,
     * copied in a job of their own. */
   def copyAllDistributed(srcPaths: DataFrame, quarantineDir: String): Unit =
     copying(srcPaths, quarantineDir).foreach((_: Row) => ())
 
-  /** The Hadoop Configuration is rebuilt per task from defaults, which is
-    * correct for any FS reachable by URI from the executors; an empty
-    * partition touches no file system. */
-  private def copyEach(quarantineDir: String, rows: Iterator[Row]): Iterator[Row] =
-    if (!rows.hasNext) rows
-    else {
-      import org.apache.hadoop.conf.Configuration
-      import org.apache.hadoop.fs.{FileUtil, Path => HPath}
-      val conf = new Configuration()
-      val qd = new HPath(quarantineDir)
-      val qfs = qd.getFileSystem(conf)
-      // verbatim copy: no client-side .crc sidecars next to the
-      // quarantined files (no-op where checksums are FS-internal)
-      qfs.setWriteChecksum(false)
-      qfs.mkdirs(qd)
-      rows.map { r =>
-        val src = new HPath(r.getString(0))
-        FileUtil.copy(src.getFileSystem(conf), src,
-          qfs, new HPath(qd, src.getName), false, true, conf)
-        r
+  /** Copies files by path into quarantineDir, which it creates. The
+    * branch is chosen by the file systems the paths resolve to, not by
+    * the path strings. */
+  private final class Copier(conf: Configuration, quarantineDir: String) {
+    private val qd = new HPath(quarantineDir)
+    // the raw file system of a checksummed one (local disk) writes no
+    // .crc sidecars next to the quarantined files
+    private val qfs = qd.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    private val localDir = localPath(qfs, qd)
+    localDir match {
+      case Some(d) => Files.createDirectories(d)
+      case None => qfs.mkdirs(qd)
+    }
+
+    def copy(srcPath: String): Unit = {
+      val src = new HPath(srcPath)
+      val sfs = src.getFileSystem(conf)
+      (localDir, localPath(sfs, src)) match {
+        case (Some(d), Some(s)) =>
+          Files.copy(s, d.resolve(s.getFileName), StandardCopyOption.REPLACE_EXISTING)
+        case _ =>
+          FileUtil.copy(sfs, src, qfs, new HPath(qd, src.getName), false, true, conf)
       }
     }
+  }
+
+  private def localPath(fs: FileSystem, p: HPath): Option[Path] =
+    if (fs.getUri.getScheme == "file") Some(Paths.get(fs.makeQualified(p).toUri.getPath))
+    else None
 }

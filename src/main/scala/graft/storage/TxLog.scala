@@ -5655,12 +5655,16 @@ object TxLog {
     val live = liveFiles(ms).toSet ++
       tagVs.flatMap(v => liveFiles(manifestsAt(ms, v, table))) ++
       branchNames.flatMap(b => liveFiles(branchLineage(all, b, table)))
+    // a file exactly minAgeMs old is not younger than the window: at
+    // minAgeMs = 0 an orphan stamped in the same millisecond as the
+    // cutoff must still go
     val cutoff = System.currentTimeMillis() - minAgeMs
+    def aged(mtime: Long): Boolean = mtime <= cutoff
     var n = 0
     f.listStatus(dataRoot).foreach { d =>
       f.listStatus(d.getPath).foreach { st =>
         val rel = s"data/${d.getPath.getName}/${st.getPath.getName}"
-        if (!live.contains(rel) && st.getModificationTime < cutoff) {
+        if (!live.contains(rel) && aged(st.getModificationTime)) {
           // recursive: a crashed writer's orphan dir can still hold a
           // non-empty _temporary/ committer staging subtree — the
           // PRIMARY orphan class vacuum exists for; a non-recursive
@@ -5698,7 +5702,7 @@ object TxLog {
         // tokens provably absorbed), or none goes.
         val allAged = below.nonEmpty && below.forall { m =>
           val p = new Path(logDir, manifestName(m.version))
-          f.exists(p) && f.getFileStatus(p).getModificationTime < cutoff
+          f.exists(p) && aged(f.getFileStatus(p).getModificationTime)
         }
         // a tag below the checkpoint needs the below-checkpoint prefix
         // to reconstruct its snapshot — truncation waits for the drop.
@@ -5712,7 +5716,7 @@ object TxLog {
           }
         foreignBelow.foreach { m =>
           val p = new Path(logDir, manifestName(m.version))
-          if (f.exists(p) && f.getFileStatus(p).getModificationTime < cutoff) {
+          if (f.exists(p) && aged(f.getFileStatus(p).getModificationTime)) {
             f.delete(p, false); n += 1
           }
         }
@@ -5728,7 +5732,7 @@ object TxLog {
       f.listStatus(chRoot).foreach { d =>
         f.listStatus(d.getPath).foreach { st =>
           val rel = s"_changes/${d.getPath.getName}/${st.getPath.getName}"
-          if (!referenced.contains(rel) && st.getModificationTime < cutoff) {
+          if (!referenced.contains(rel) && aged(st.getModificationTime)) {
             f.delete(st.getPath, true); n += 1
           }
         }
@@ -5747,7 +5751,7 @@ object TxLog {
       val referencedDv = allManifests(s, table).flatMap(_.dvs.map(_.p)).toSet
       f.listStatus(dvRoot).foreach { st =>
         val rel = s"dv/${st.getPath.getName}"
-        if (!referencedDv.contains(rel) && st.getModificationTime < cutoff) {
+        if (!referencedDv.contains(rel) && aged(st.getModificationTime)) {
           f.delete(st.getPath, false); n += 1
         }
       }
@@ -5761,7 +5765,7 @@ object TxLog {
       val referencedEq = allManifests(s, table).flatMap(_.eqdels.map(_.p)).toSet
       f.listStatus(eqRoot).foreach { st =>
         val rel = s"${TxEqDel.SidecarDir}/${st.getPath.getName}"
-        if (!referencedEq.contains(rel) && st.getModificationTime < cutoff) {
+        if (!referencedEq.contains(rel) && aged(st.getModificationTime)) {
           f.delete(st.getPath, false); n += 1
         }
       }

@@ -130,7 +130,7 @@ class EtlConcurrentSinksSpec extends AnyFunSuite {
     assert(jobs.groups.forall(_ == "etl-group-spec"), jobs.groups)
   }
 
-  test("v2 scale mode: 6 jobs per entity, and the counters aggregate is the only shuffle") {
+  test("v2 scale mode: 4 jobs per entity, and no shuffle stage at all") {
     val base = Files.createTempDirectory("etl_shape_")
     EtlFixtures.writeCorpus(base)
     val conf = usersConf(base)
@@ -138,15 +138,10 @@ class EtlConcurrentSinksSpec extends AnyFunSuite {
       EntityPipeline.run(spark, conf, V2, base.resolve("errors.log").toString, fidelity = false)
     }
     assert(r.metrics == EtlMetrics(9, 7, 2))
-    // AQE runs the aggregate's map stage as a job of its own, under the
-    // root SQL execution of the counters' collect
-    val countersExec = jobs.stageName.collect {
-      case (s, n) if n.startsWith("collect at EntityPipeline.scala") => jobs.execOf(jobs.stageJob(s))
-    }.toSet
-    assert(countersExec.size == 1, jobs.stageName)
-    assert(jobs.shuffleStages.nonEmpty)
-    assert(jobs.shuffleStages.forall(s => countersExec(jobs.execOf(jobs.stageJob(s)))),
-      jobs.shuffleStages.map(jobs.stageName))
-    assert(jobs.execOf.size == 6, jobs.stageName.toSeq.sorted)
+    // the counters, the error log with the quarantine copy, and two CSVs:
+    // each one job of one stage, none writing shuffle output
+    assert(jobs.execOf.size == 4, jobs.stageName.toSeq.sorted)
+    assert(jobs.stageJob.size == 4, jobs.stageName.toSeq.sorted)
+    assert(jobs.shuffleStages.isEmpty, jobs.shuffleStages.map(jobs.stageName))
   }
 }
