@@ -5,18 +5,19 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness. */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Writes a string → string map as one JSON object (`oracle_sql.json`,
+    * `errors.json`). Jackson escapes quotes, backslashes and every control
+    * character, so a tab or CR in oracle SQL or an exception message
+    * cannot make the reader's `json.load` fail. */
+  def writeJsonMap(path: String, m: collection.Map[String, String]): Unit = {
+    import scala.jdk.CollectionConverters._
+    Files.writeString(Paths.get(path), json.writeValueAsString(m.asJava))
+  }
+
+  /** One JSON string literal, escaped like [[writeJsonMap]]'s values. */
+  def jsonString(s: String): String = json.writeValueAsString(s)
 
   /** The dump loop, parameterized over the query map so the failure
     * path is testable (VerifyFailureSpec injects a throwing query).
@@ -52,12 +53,8 @@ object Verify {
         System.err.println(s"[verify] FAILED $name: $msg")
       }
     }
-    val json = oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    if (failed.nonEmpty)
-      Files.writeString(Paths.get(s"$outDir/errors.json"),
-        failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    writeJsonMap(s"$outDir/oracle_sql.json", oracleSql)
+    if (failed.nonEmpty) writeJsonMap(s"$outDir/errors.json", failed)
     System.err.println(
       s"[verify] done: ${queries.size - failed.size} ok, ${failed.size} failed" +
         (if (failed.nonEmpty) failed.keys.mkString(" (", ", ", ")") else ""))
@@ -66,15 +63,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-verify", GraftSession.envCores)
     // dev-loop filter: SPARK_GRAFT_ONLY=key1,key2 dumps just those
     // queries (and just their oracle entries) — e.g. proving one new
     // key at sf1 without re-running the whole surface

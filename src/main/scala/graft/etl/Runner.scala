@@ -61,15 +61,7 @@ object Runner {
       case Some(toml) => Config.fromToml(toml, baseDir, mode)
       case None => Config.builtin(baseDir, mode)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-etl", graft.GraftSession.envCores)
     try run(spark, entities, mode, Paths.get(baseDir, "errors.log").toString,
       fidelity)
     finally spark.stop()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.functions.{call_function, udf}
+import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -155,14 +155,6 @@ object Validator extends Serializable {
       .createOrReplaceTempFunction(name, exprs => ValidateJson(exprs.head, s),
         "built-in")
     c => call_function(name, c)
-  }
-
-  /** The r1-r3 ScalaUDF form, kept as the comparison twin for
-    * ValidatorParitySpec and the M-row before/after benchmark. */
-  def validateColUdf(schema: CompiledSchema): Column => Column = {
-    val s = schema
-    val f = udf((raw: String) => validate(raw, s))
-    c => f(c)
   }
 }
 

@@ -138,9 +138,9 @@ object Declared7 {
   val q78: Q = (s, dir) =>
     knnGraphBrute(Tables(s, dir, "embeddings").filter(col("label") === KnnLabel))
 
-  /** q78's brute body over an ARBITRARY embeddings slice — the seam the
-    * KnnCrossover tool uses to measure brute-vs-certificate at growing
-    * slice sizes (the query itself always passes the KnnLabel slice). */
+  /** q78's brute body over an ARBITRARY embeddings slice, so brute and
+    * certificate ([[knnGraphIvf]]) can be compared on slices larger than
+    * the KnnLabel slice the query itself always passes (BASELINE M32). */
   private[graft] def knnGraphBrute(emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
@@ -224,8 +224,9 @@ object Declared7 {
   }
 
   /** q78b's certificate body over an ARBITRARY embeddings slice with
-    * tunable cell count / probe breadth — the KnnCrossover seam (the
-    * query itself always passes the KnnLabel slice with the pinned
+    * tunable cell count / probe breadth, the knobs the brute-vs-certificate
+    * crossover is measured over (BASELINE M32; the query itself always
+    * passes the KnnLabel slice with the pinned
     * [[Q78Cells]]/[[Q78NProbe]]; exactness is INDEPENDENT of both knobs
     * — the certificate scans whatever it cannot prove prunable). */
   private[graft] def knnGraphIvf(emb: DataFrame,

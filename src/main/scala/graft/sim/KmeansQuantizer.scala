@@ -43,8 +43,8 @@ object KmeansQuantizer {
     * §2.5 input skew): the test corpora are single-file parquet — ONE
     * scan split — so the kernel-heavy projections (homeCid / residual /
     * PQ encode / ADC tables) serialize on one core no matter how many
-    * the session has (r21 JobProbe: 0.65 s single-TASK stages inside
-    * sim_topk_ivfpq_res on local[32]). When the input's natural split
+    * the session has (r21 per-job timing: 0.65 s single-TASK stages
+    * inside sim_topk_ivfpq_res on local[32]). When the input's natural split
     * count cannot feed the session's parallelism, hash-repartition by
     * vec_id BEFORE the kernels; inputs with enough splits (the 100 TB
     * case — thousands of file splits) skip the exchange entirely, so

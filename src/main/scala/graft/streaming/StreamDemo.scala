@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.{Config, V2}
 
 /** Runnable demo of the streaming ETL port: watches `<baseDir>/users`,
@@ -17,12 +15,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse(sys.error("need baseDir"))
     val seconds = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-stream-demo", 4)
     val users = Config.builtin(baseDir, V2).head
     val running = StreamingEtl.start(spark, users, V2,
       Paths.get(baseDir, "errors.log").toString,

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Standing sf1 gate (dev tool): one command that re-proves the scale
   * story every round instead of citing the round-7 measurement
   * (BASELINE M24). Generate-if-absent → full-surface correctness dump →
@@ -71,15 +69,7 @@ object Sf1Gate {
     val outDir = if (args.length > 2) args(2) else "/tmp/sf1_gate"
     val full = sys.env.get("SF1_GATE_FULL").contains("1")
 
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-sf1-gate")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-sf1-gate", 32)
 
     // ---- 1. generate if absent OR STALE (deterministic, replica 0 =
     // identity). Staleness matters: the round driver regenerates
@@ -116,15 +106,8 @@ object Sf1Gate {
     }
 
     // ---- 3. oracle_sql.json — minus the heavy set unless SF1_GATE_FULL=1
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    val oracles = graft.SparkEntry.oracleSql
-      .filter { case (k, _) => full || !HeavyOracles.contains(k) }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    graft.Verify.writeJsonMap(s"$outDir/oracle_sql.json", graft.SparkEntry.oracleSql
+      .filter { case (k, _) => full || !HeavyOracles.contains(k) })
 
     // ---- 4. DuckDB compare via the dev harness (optional dependency)
     // parse the harness summary: "== N ok, M fail ==". A harness
@@ -212,9 +195,8 @@ object Sf1Gate {
           graft.SparkEntry.queries(name)(spark, sampleDir).coalesce(1)
             .write.mode("overwrite").parquet(s"$sOut/$name")
         }
-        Files.writeString(Paths.get(s"$sOut/oracle_sql.json"),
-          SampledHeavy.map(k => s"${q(k)}: ${q(graft.SparkEntry.oracleSql(k))}")
-            .mkString("{", ",", "}"))
+        graft.Verify.writeJsonMap(s"$sOut/oracle_sql.json",
+          SampledHeavy.map(k => k -> graft.SparkEntry.oracleSql(k)).toMap)
         runCheck(sampleDir, sOut)
       } catch {
         case e: Throwable =>
@@ -392,6 +374,7 @@ object Sf1Gate {
     }
 
     // ---- 5. one summary line
+    import graft.Verify.{jsonString => q}
     val total = timings.values.sum
     val slowest5 = timings.toSeq.sortBy(-_._2).take(5)
       .map { case (k, v) => s"${q(k)}:${math.round(v * 100) / 100.0}" }

@@ -45,11 +45,7 @@ import graft.storage.TxLog
 object TxContend {
 
   private def session(name: String): SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GraftSession.local(name, 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -14,10 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the UTF-8-byte string order the BPE argmax tie-break pins. */
 class KernelParitySpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   import graft.sim.{KmeansQuantizer => KQ, PqQuantizer => PQ}
 

@@ -11,13 +11,21 @@ class VerifyFailureSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
+  private def readJsonMap(path: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(new java.io.File(path), classOf[java.util.Map[String, String]])
+      .asScala.toMap
+  }
+
   test("a throwing query lands in errors.json; healthy queries still dump") {
     val out = Files.createTempDirectory("verify_fail_").toString
     val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
       "ok_query" -> ((s, dir) => Tables(s, dir, "nation")),
       "boom_query" -> ((_, _) => sys.error("injected \"quoted\"\tfailure")))
-    val failed = Verify.run(spark, sf, out, queries,
-      Map("ok_query" -> "SELECT * FROM nation"))
+    val oracles = Map("ok_query" -> "SELECT * FROM nation",
+      "odd_query" -> "SELECT '\"q\"\t\u0001' AS odd")
+    val failed = Verify.run(spark, sf, out, queries, oracles)
     assert(failed.keySet == Set("boom_query"))
     // healthy query dumped parquet; oracle json intact
     assert(Files.list(Paths.get(s"$out/ok_query")).count() > 0)
@@ -28,6 +36,10 @@ class VerifyFailureSpec extends AnyFunSuite {
     val errs = Files.readString(Paths.get(s"$out/errors.json"))
     assert(errs.contains("boom_query"))
     assert(errs.contains("injected"))
+    // both files parse back to exactly the maps that were written
+    assert(readJsonMap(s"$out/oracle_sql.json") == oracles)
+    assert(readJsonMap(s"$out/errors.json") ==
+      Map("boom_query" -> "RuntimeException: injected \"quoted\"\tfailure"))
     assert(!Files.exists(Paths.get(s"$out/boom_query")),
       "failed query must not leave a pseudo-output directory")
   }

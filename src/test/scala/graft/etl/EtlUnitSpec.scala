@@ -97,9 +97,9 @@ class ValidatorSpec extends AnyFunSuite {
 }
 
 /** Parity of the codegen'd [[ValidateJson]] expression with the r1-r3
-  * ScalaUDF twin over real fixtures + adversarial inputs — the O4
-  * promotion (SURVEY §4.3) must be a pure perf change, class/field/msg
-  * identical per row. */
+  * ScalaUDF twin (rebuilt here: a `udf` over `Validator.validate`) over
+  * real fixtures + adversarial inputs — the O4 promotion (SURVEY §4.3)
+  * must be a pure perf change, class/field/msg identical per row. */
 class ValidatorParitySpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
   val users = SchemaCompiler.compileJson(EtlFixtures.userSchemaJson)
@@ -119,12 +119,15 @@ class ValidatorParitySpec extends AnyFunSuite {
 
   test("expression verdicts == UDF verdicts on every adversarial input") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, udf}
     val df = inputs.toDF("value")
     val expr = df.select(Validator.validateCol(users)(col("value")).as("v"))
       .select("v.errClass", "v.errField", "v.errMsg").collect()
-    val viaUdf = df.select(Validator.validateColUdf(users)(col("value")).as("v"))
+    val s = users
+    val validateUdf = udf((raw: String) => Validator.validate(raw, s))
+    val viaUdf = df.select(validateUdf(col("value")).as("v"))
       .select("v.errClass", "v.errField", "v.errMsg").collect()
+    assert(expr.length == viaUdf.length)
     expr.zip(viaUdf).zipWithIndex.foreach { case ((a, b), i) =>
       // parse-error message prose may differ (String vs byte parser
       // coordinates); class + field must be identical, and message too
