@@ -330,14 +330,26 @@ object Declared7 {
     * node of `nodes` (vec_id). Triangle counting enumerates each
     * triangle once via the a<b<c orientation (two equi-joins on the
     * dedup'd edge list — no wedge ever materializes twice), then
-    * explodes the 3 corners for per-node counts. All-integer output. */
-  private def mutualKnnGraph(s: SparkSession, nodes: DataFrame,
-                             knn: DataFrame): DataFrame = {
+    * explodes the 3 corners for per-node counts. All-integer output.
+    *
+    * The mutual test references `knn` ONCE: grouping the edges by their
+    * unordered pair (least, greatest) keeps a pair exactly when both
+    * orientations occur, i.e. when `a < b` is true on some row and false
+    * on another. That is `knn.intersect(rev).filter(a < b)` — duplicate
+    * rows collapse in the group, a self-loop (a, a) only ever reads
+    * false and drops — but an intersect puts the deep IVF `knn` plan in
+    * the tree twice, and every use of `mutual` below copies it again:
+    * each copy is re-analysed while the DataFrame is built, and the
+    * intersect's two sides each evaluate it when the query runs. */
+  private[graft] def mutualKnnGraph(s: SparkSession, nodes: DataFrame,
+                                    knn: DataFrame): DataFrame = {
     import s.implicits._
-    val rev = knn.select($"b".as("a"), $"a".as("b"))
-    val mutual = knn.intersect(rev).filter($"a" < $"b")
-    val deg = mutual.select($"a".as("nid"))
-      .union(mutual.select($"b".as("nid")))
+    val mutual = knn
+      .groupBy(least($"a", $"b").as("a"), greatest($"a", $"b").as("b"))
+      .agg((min($"a" < $"b") =!= max($"a" < $"b")).as("both"))
+      .filter($"both")
+      .select($"a", $"b")
+    val deg = mutual.select(explode(array($"a", $"b")).as("nid"))
       .groupBy($"nid").agg(count(lit(1)).as("deg"))
     val e1 = mutual
     val e2 = mutual.select($"a".as("b"), $"b".as("c"))

@@ -2,6 +2,7 @@ package graft.storage
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
 import org.apache.spark.sql.functions.{assert_true, coalesce, col, input_file_name, lit, max, min, not, when}
 
 /** Minimal transactional table log — the atomicity primitive under
@@ -2712,7 +2713,7 @@ object TxLog {
     // the first schema-bearing manifest can't silently narrow the table
     val legacyExisting =
       if (tableSchemaFrom(ms0).isEmpty)
-        liveFiles(ms0).headOption.map(h => s.read.parquet(absPath(table)(h)).schema)
+        liveFiles(ms0).headOption.map(h => GraftParquetFooter.schema(s, absPath(table)(h)))
       else None
     // fail-fast evolution + reserved-name checks BEFORE the data write
     // (a schema conflict must not stage a whole append as vacuum
@@ -2759,7 +2760,7 @@ object TxLog {
     if (tokenTaken(ms0, writerId, batchId)) return -1L
     val legacyExisting =
       if (tableSchemaFrom(ms0).isEmpty)
-        liveFiles(ms0).headOption.map(h => s.read.parquet(absPath(table)(h)).schema)
+        liveFiles(ms0).headOption.map(h => GraftParquetFooter.schema(s, absPath(table)(h)))
       else None
     guardReservedCols(df.schema) // fail-fast, like commitInternal
     tableSchemaFrom(ms0).orElse(legacyExisting).foreach(mergedSchema(_, df.schema,
@@ -2953,7 +2954,7 @@ object TxLog {
     if (tokenTaken(ms0, writerId, batchId)) return -1L
     val legacyExisting =
       if (tableSchemaFrom(ms0).isEmpty)
-        liveFiles(ms0).headOption.map(h => s.read.parquet(absPath(table)(h)).schema)
+        liveFiles(ms0).headOption.map(h => GraftParquetFooter.schema(s, absPath(table)(h)))
       else None
     commitManifest(s, table, rel, stats, writerId, batchId, checkpoint = false,
       maxRetries, incoming = Some(incoming), legacyExisting = legacyExisting,
@@ -4215,7 +4216,7 @@ object TxLog {
         beforeCommit, partitionColsFrom(ms))
     }
     val targetCols = tableSchemaFrom(ms).map(_.fieldNames.toSeq)
-      .getOrElse(s.read.parquet(absPath(table)(files.head)).columns.toSeq)
+      .getOrElse(GraftParquetFooter.schema(s, absPath(table)(files.head)).fieldNames.toSeq)
     require(source.columns.toSet == targetCols.toSet,
       s"merge source columns ${source.columns.toSet} != table columns ${targetCols.toSet}")
     // MATERIALIZE the source (Delta does the same for MERGE): it is
@@ -4955,7 +4956,7 @@ object TxLog {
     require(ms.nonEmpty, s"truncate of nonexistent txlog table $table")
     val ddl = tableSchemaFrom(ms)
       .orElse(liveFiles(ms).headOption.map(h =>
-        s.read.parquet(absPath(table)(h)).schema))
+        GraftParquetFooter.schema(s, absPath(table)(h))))
       .getOrElse(throw new IllegalStateException(
         s"truncate of $table: schema unknowable (empty table, no recorded schema)"))
     overwriteStaged(s, table, Seq.empty, Seq.empty, ddlOf(ddl))

@@ -18,7 +18,7 @@ object Probe {
   /** Runs `body` under a fresh job group and counts the jobs Spark's
     * status tracker files under it. The calling thread's job group is
     * cleared afterwards. */
-  private def phase[T](spark: SparkSession, what: String)(body: => T): (T, Phase) = {
+  private[graft] def phase[T](spark: SparkSession, what: String)(body: => T): (T, Phase) = {
     val sc = spark.sparkContext
     val group = s"graft-probe-${java.util.UUID.randomUUID()}"
     sc.setJobGroup(group, what, interruptOnCancel = false)

@@ -163,7 +163,7 @@ object Sf1Gate {
           Seq(("documents", "doc_id", 8), ("embeddings", "vec_id", 16))
             .foreach { case (t, key, mod) =>
               val tmp = Paths.get(s"$sampleDir/__tmp_$t")
-              spark.read.parquet(s"$sf1Dir/$t.parquet")
+              graft.Tables.parquet(spark, s"$sf1Dir/$t.parquet")
                 .filter(pmod(xxhash64(col(key)), lit(mod)) === 0)
                 .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
               val f = scala.jdk.CollectionConverters
@@ -215,7 +215,7 @@ object Sf1Gate {
     // path compression ⇒ every root is its component's minimum id,
     // which is precisely dedup_clusters' labeling contract.
     val (clustersStatus, clustersDocs) = try {
-      val pairs = spark.read.parquet(s"$outDir/dedup_jaccard")
+      val pairs = graft.Tables.parquet(spark, s"$outDir/dedup_jaccard")
         .select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -232,7 +232,7 @@ object Sf1Gate {
       }
       val expected = pairs.iterator.flatMap(p => Iterator(p._1, p._2))
         .toSet[Long].iterator.map(v => v -> find(v)).toMap
-      val got = spark.read.parquet(s"$outDir/dedup_clusters")
+      val got = graft.Tables.parquet(spark, s"$outDir/dedup_clusters")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       if (got == expected && got.nonEmpty) ("ok", got.size)
       else if (got.isEmpty) ("empty", 0)
@@ -259,7 +259,7 @@ object Sf1Gate {
       val whDir = Files.createTempDirectory("sf1_wv_wh_").toString
       spark.conf.set("spark.sql.catalog.sf1wv", "graft.storage.GraftCatalog")
       spark.conf.set("spark.sql.catalog.sf1wv.warehouse", whDir)
-      spark.read.parquet(s"$sf1Dir/orders.parquet")
+      graft.Tables.parquet(spark, s"$sf1Dir/orders.parquet")
         .createOrReplaceTempView("sf1_wv_orders")
       spark.sql("CREATE TABLE sf1wv.default.wv (o_orderkey BIGINT, " +
         "cust_small INT, o_orderstatus STRING) USING txlog")

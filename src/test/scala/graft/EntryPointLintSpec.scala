@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the set of runnable mains and session builders from growing back:
-  * one-off probes belong in `graft.tools.Probe` or `perfbench/`, and every
-  * session is built through [[GraftSession.local]]. */
+  * one-off probes belong in `graft.tools.Probe` or `perfbench/`, every
+  * session is built through [[GraftSession.local]], and every parquet read
+  * is given its schema. */
 class EntryPointLintSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(Path, Seq[String])] = {
@@ -51,5 +52,15 @@ class EntryPointLintSpec extends AnyFunSuite {
       if line.contains("SparkSession.builder()") && !isComment(line)
     } yield s"${path.getFileName}:${i + 1}"
     assert(sites.size == 1 && sites.head.startsWith("GraftSession.scala:"), sites)
+  }
+
+  test("no parquet read without a schema: each would infer it in a Spark job") {
+    // `graft.Tables.parquet` reads the schema from one footer on the driver
+    val sites = for {
+      (path, lines) <- sources
+      (line, i) <- lines.zipWithIndex
+      if line.contains(".read.parquet(") && !isComment(line)
+    } yield s"${path.getFileName}:${i + 1}"
+    assert(sites.isEmpty, sites)
   }
 }

@@ -27,12 +27,37 @@ import org.scalatest.funsuite.AnyFunSuite
   *    output with outputTimestampType=TIMESTAMP_MICROS.
   */
 class TablesEncodingSpec extends AnyFunSuite {
+  import TablesEncodingSpec.writeVariant
   lazy val spark: SparkSession = TestSpark.spark
-  val sf = "/root/testdata/sf0.001"
+
+  test("Tables normalizes all three ts encodings to TimestampType with identical rows") {
+    val variants = TablesEncodingSpec.Encodings.map(writeVariant(spark, _))
+    val dfs = variants.map(d => Tables(spark, d, "events"))
+    dfs.foreach(df => assert(df.schema("ts").dataType == TimestampType,
+      s"ts not normalized: ${df.schema("ts").dataType}"))
+    val collected = dfs.map(
+      _.select(col("event_id"), col("ts")).orderBy("event_id").collect().toSeq)
+    assert(collected(0) == collected(1), "int64_nanos rows differ from micros_ntz")
+    assert(collected(1) == collected(2), "micros_ntz rows differ from micros_utc")
+  }
+
+  test("q25 sessionize yields identical results from every encoding") {
+    val variants = TablesEncodingSpec.Encodings.map(writeVariant(spark, _))
+    val results = variants.map(d =>
+      queries.Declared2.q25(spark, d).collect().toSeq)
+    assert(results(0).nonEmpty)
+    assert(results(0) == results(1), "q25 differs: int64_nanos vs micros_ntz")
+    assert(results(1) == results(2), "q25 differs: micros_ntz vs micros_utc")
+  }
+}
+
+object TablesEncodingSpec {
+  val Encodings: Seq[String] = Seq("int64_nanos", "micros_ntz", "micros_utc")
+  private val sf = "/root/testdata/sf0.001"
 
   /** Write the sf0.001 events table (ts re-encoded per variant) as
     * `events.parquet` under a fresh temp dir; return the dir. */
-  private def writeVariant(encode: String): String = {
+  def writeVariant(spark: SparkSession, encode: String): String = {
     import spark.implicits._
     val dir = Files.createTempDirectory(s"graft-enc-$encode").toFile
     dir.deleteOnExit()
@@ -53,25 +78,5 @@ class TablesEncodingSpec extends AnyFunSuite {
       .find(_.getName.endsWith(".parquet")).get
     Files.move(part.toPath, new java.io.File(dir, "events.parquet").toPath)
     dir.toString
-  }
-
-  test("Tables normalizes all three ts encodings to TimestampType with identical rows") {
-    val variants = Seq("int64_nanos", "micros_ntz", "micros_utc").map(writeVariant)
-    val dfs = variants.map(d => Tables(spark, d, "events"))
-    dfs.foreach(df => assert(df.schema("ts").dataType == TimestampType,
-      s"ts not normalized: ${df.schema("ts").dataType}"))
-    val collected = dfs.map(
-      _.select(col("event_id"), col("ts")).orderBy("event_id").collect().toSeq)
-    assert(collected(0) == collected(1), "int64_nanos rows differ from micros_ntz")
-    assert(collected(1) == collected(2), "micros_ntz rows differ from micros_utc")
-  }
-
-  test("q25 sessionize yields identical results from every encoding") {
-    val variants = Seq("int64_nanos", "micros_ntz", "micros_utc").map(writeVariant)
-    val results = variants.map(d =>
-      queries.Declared2.q25(spark, d).collect().toSeq)
-    assert(results(0).nonEmpty)
-    assert(results(0) == results(1), "q25 differs: int64_nanos vs micros_ntz")
-    assert(results(1) == results(2), "q25 differs: micros_ntz vs micros_utc")
   }
 }

@@ -5,19 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** `Probe.measure` splits a key into construction and execution by job
-  * group: building a one-table scan runs only the parquet schema-inference
-  * job of `spark.read.parquet` in `Tables`, each `count()` runs at least
-  * one job, and the probe leaves no job group behind. */
+  * group: building a scan runs no job (`Tables` reads each table's schema
+  * from a parquet footer on the driver), neither does building the
+  * six-table join of q05, each `count()` runs at least one job, and the
+  * probe leaves no job group behind. */
 class ProbeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
-  test("q01_scan_filter: 1 schema job at construction, >=1 job per rep, a scan in the plan") {
+  test("q01_scan_filter: no job at construction, >=1 job per rep, a scan in the plan") {
     val m = Probe.measure(spark, "q01_scan_filter", sf, 2)
     assert(m.key == "q01_scan_filter")
-    // `spark.read.parquet` merges the file footers' schemas in a Spark job
-    // on every call; a construction without jobs needs `Tables` to skip it
-    assert(m.construct.jobs == 1, s"construction ran ${m.construct.jobs} jobs")
+    assert(m.construct.jobs == 0, s"construction ran ${m.construct.jobs} jobs")
     assert(m.reps.size == 2)
     m.reps.zipWithIndex.foreach { case (p, i) =>
       assert(p.jobs >= 1, s"rep ${i + 1} ran no job")
@@ -27,6 +26,12 @@ class ProbeSpec extends AnyFunSuite {
     assert(m.plan.contains("Scan"), m.plan)
     assert(spark.sparkContext.getLocalProperty("spark.jobGroup.id") == null,
       "the calling thread's job group must be cleared")
+  }
+
+  test("q05_multiway_join_agg: six table reads, no job at construction") {
+    val m = Probe.measure(spark, "q05_multiway_join_agg", sf, 1)
+    assert(m.construct.jobs == 0, s"construction ran ${m.construct.jobs} jobs")
+    assert(m.reps.head.jobs >= 1)
   }
 
   test("an unknown key is refused before any job runs") {
