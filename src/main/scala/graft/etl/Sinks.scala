@@ -13,6 +13,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.GraftParquetIO
 
+import graft.storage.LocalFs
+
 /** O14 CSV sink. Two modes (SURVEY.md §4.3, §7.6):
   *
   *  - FIDELITY: reference-faithful single-file append with header-once
@@ -51,7 +53,7 @@ object CsvSink {
   }
 
   def appendScale(df: DataFrame, outDir: String): Unit =
-    df.write.mode("append").option("header", "true").csv(outDir)
+    df.write.options(LocalFs.WriteOptions).mode("append").option("header", "true").csv(outDir)
 }
 
 /** O6 error-log sink: `DD/MM/YYYY hh:mm:ss AM/PM, ERROR, SCHEMA ERR,
@@ -95,7 +97,7 @@ object ErrorLogSink {
         date_format(current_timestamp(), "dd/MM/yyyy hh:mm:ss a"),
         lit(", ERROR, SCHEMA ERR, "), col("src_path"),
         lit(", "), col("errMsg")).as("value"))
-      .write.mode("append").text(logDir)
+      .write.options(LocalFs.WriteOptions).mode("append").text(logDir)
 }
 
 /** O7 quarantine sink: copy (not move — `shutil.copy`, `main.py:34-38`)
@@ -114,13 +116,12 @@ object ErrorLogSink {
   * When the quarantine directory and the source both resolve to the
   * local file system, the copy is `java.nio.file.Files.copy`; every other
   * pair goes through Hadoop's `FileUtil.copy`, which covers HDFS and
-  * object stores (SURVEY §2.1 O7's named alternative). Without libhadoop,
-  * Hadoop's local file system sets the permission of every file and
-  * directory it creates by running a `chmod` process: one process per
-  * quarantined file. Measured on 4 vCPUs with the 30%-invalid corpus of
-  * the `etl_scale_dirty` benchmark, 60 field-missing files packed into
-  * one scan partition took 83–116 ms to copy through Hadoop and 0.6 ms
-  * through NIO, and that error-log task was an entity's critical path. */
+  * object stores (SURVEY §2.1 O7's named alternative). The local copy
+  * needs no Hadoop file system at all. The sinks' Spark writes, like
+  * every local write of graft, create their files through
+  * [[graft.storage.NioLocalFileSystem]], which sets permissions in
+  * process instead of starting a `chmod` per file where libhadoop is
+  * missing. */
 object QuarantineSink {
   def copyAll(spark: SparkSession, srcPaths: Seq[String], quarantineDir: String): Unit =
     if (srcPaths.nonEmpty) {

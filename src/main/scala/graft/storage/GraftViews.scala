@@ -42,7 +42,7 @@ object GraftViews {
   def write(s: SparkSession, nsDir: Path, name: String, v: Stored,
             replace: Boolean): Boolean = {
     val p = path(nsDir, name)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val f = LocalFs.fileSystem(p, s.sparkContext.hadoopConfiguration)
     f.mkdirs(p.getParent)
     if (replace) f.delete(p, false)
     try {

@@ -142,7 +142,7 @@ object TxDv {
                                      table: String, dv: Dv): String = {
     val rel = s"dv/${java.util.UUID.randomUUID()}.dv"
     val p = new Path(new Path(table), rel)
-    val f = p.getFileSystem(conf)
+    val f = LocalFs.fileSystem(p, conf)
     f.mkdirs(p.getParent)
     val out = f.create(p, false)
     try out.write(serialize(dv)) finally out.close()

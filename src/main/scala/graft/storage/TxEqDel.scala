@@ -260,7 +260,7 @@ object TxEqDel {
                                      table: String, ks: KeySet): String = {
     val rel = s"$SidecarDir/${java.util.UUID.randomUUID()}.eqd"
     val p = new Path(new Path(table), rel)
-    val f = p.getFileSystem(conf)
+    val f = LocalFs.fileSystem(p, conf)
     f.mkdirs(p.getParent)
     val out = f.create(p, false)
     try out.write(serialize(ks)) finally out.close()

@@ -2706,7 +2706,7 @@ object TxLog {
     // checkpoints absorb the token set ([[commitCheckpoint]]) and
     // [[vacuum]] truncates below them, so a maintained table's listing
     // is bounded by commits-since-checkpoint for the loop's lifetime.
-    val ms0 = manifests(s, table) // ONE listing: token pre-flight + schema probe
+    val ms0 = manifests(s, table) // ONE listing: token pre-flight, schema probe, staging
     if (tokenTaken(ms0, writerId, batchId)) return -1L
     // schema-evolution fallback for LEGACY logs (no recorded schema but
     // existing data): infer the existing schema from one file ONCE so
@@ -2721,7 +2721,7 @@ object TxLog {
     guardReservedCols(df.schema)
     tableSchemaFrom(ms0).orElse(legacyExisting).foreach(mergedSchema(_, df.schema,
       n => defaultsIn(propsFrom(ms0)).contains(physicalName(colMapFrom(ms0), n))))
-    val (rel, stats) = stageWrite(s, new Path(table), df)
+    val (rel, stats) = stageWrite(s, new Path(table), df, listed = Some(ms0))
     commitManifest(s, table, rel, stats, writerId, batchId, checkpoint = false,
       maxRetries, incoming = Some(df.schema), legacyExisting = legacyExisting,
       cmAtStaging = Some(colMapFrom(ms0)))
@@ -2773,7 +2773,7 @@ object TxLog {
     // the repartition happens INSIDE stagePartitioned, on the
     // physical-translated rows
     val (rel, stats) = stagePartitioned(s, new Path(table), df, physSpecs,
-      clusterTasks = Some(0))
+      clusterTasks = Some(0), listed = Some(ms0))
     commitManifest(s, table, rel, stats, writerId, batchId, checkpoint = false,
       maxRetries, incoming = Some(df.schema), legacyExisting = legacyExisting,
       pcols = physSpecs, cmAtStaging = Some(cm))
@@ -2788,15 +2788,17 @@ object TxLog {
     * arrive LOGICAL and translate here (after the CHECK guard, which
     * binds logical). `clusterTasks` repartitions the translated rows
     * by the partition values (Some(0) = value-only hashing, Some(n) =
-    * n tasks) so each tuple lands in one task. */
+    * n tasks) so each tuple lands in one task. `listed` is the caller's
+    * listing of the log, when it has one. */
   private def stagePartitioned(s: SparkSession, root: Path, df0: DataFrame,
                                pcols: Seq[String],
-                               clusterTasks: Option[Int] = None)
+                               clusterTasks: Option[Int] = None,
+                               listed: Option[Seq[Manifest]] = None)
       : (Seq[String], Seq[TxStats.FileStats]) = {
     val f = fs(s, root)
     val uuid = java.util.UUID.randomUUID().toString
     val dataDir = new Path(root, s"data/$uuid")
-    val ms0 = manifests(s, root.toString)
+    val ms0 = listed.getOrElse(manifests(s, root.toString))
     val props0 = propsFrom(ms0)
     val cm0 = colMapFrom(ms0)
     // generated columns fill/validate FIRST (NOT NULL and CHECK then
@@ -2814,7 +2816,8 @@ object TxLog {
     val dup = staging.foldLeft(df) { case (d, (_, physKey, c)) =>
       d.withColumn(s"__p_$physKey", c)
     }
-    dup.write.options(TxStats.ExactStatsOptions).mode(SaveMode.ErrorIfExists)
+    dup.write.options(LocalFs.WriteOptions).options(TxStats.ExactStatsOptions)
+      .mode(SaveMode.ErrorIfExists)
       .partitionBy(staging.map { case (_, physKey, _) => s"__p_$physKey" }: _*)
       .parquet(dataDir.toString)
     val rel = {
@@ -2886,7 +2889,8 @@ object TxLog {
   }
 
   private def stageWrite(s: SparkSession, root: Path, df: DataFrame,
-                         cmOverride: Option[ColMap] = None)
+                         cmOverride: Option[ColMap] = None,
+                         listed: Option[Seq[Manifest]] = None)
       : (Seq[String], Seq[TxStats.FileStats]) = {
     val f = fs(s, root)
     val uuid = java.util.UUID.randomUUID().toString
@@ -2899,7 +2903,9 @@ object TxLog {
     // arrive LOGICAL (checks bind to logical names) and the files are
     // written PHYSICAL (the on-disk contract); overwrite passes the
     // empty override because it RESETS the mapping with its schema.
-    val ms0 = manifests(s, root.toString)
+    // `listed` is the caller's listing of the log, when it has one: the
+    // append then stages against the state its checks and drift guard read.
+    val ms0 = listed.getOrElse(manifests(s, root.toString))
     val props = propsFrom(ms0)
     val bloomOpts = TxBloom.writeOptions(props)
     val cm = cmOverride.getOrElse(colMapFrom(ms0))
@@ -2919,7 +2925,7 @@ object TxLog {
       if (cmOverride.isDefined) genFilled
       else notNullGuard(genFilled, tableSchemaFrom(ms0))
     toPhysical(TxCheck.guard(s, nnGuarded, props), cm)
-      .write.options(bloomOpts).options(TxStats.ExactStatsOptions)
+      .write.options(LocalFs.WriteOptions).options(bloomOpts).options(TxStats.ExactStatsOptions)
       .mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
     val rel = f.listStatus(dataDir)
       .filter(_.getPath.getName.endsWith(".parquet"))
@@ -3206,7 +3212,7 @@ object TxLog {
     * conditional-put store on object stores — see [[LogStore]]).
     * False = a concurrent committer took the slot. */
   private def publish(f: FileSystem, logDir: Path, m: Manifest): Boolean = {
-    f.mkdirs(logDir)
+    LocalFs.fileSystem(logDir, f.getConf).mkdirs(logDir)
     val target = new Path(logDir, manifestName(m.version))
     val scheme = Option(target.toUri.getScheme).getOrElse(f.getUri.getScheme)
     LogStore.forScheme(scheme).putIfAbsent(f, logDir, target,
@@ -4629,7 +4635,7 @@ object TxLog {
       val uuid = java.util.UUID.randomUUID().toString
       val dir = new Path(root, s"_changes/$uuid-$kind")
       df.coalesce(math.max(1, sizeHint))
-        .write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
+        .write.options(LocalFs.WriteOptions).mode(SaveMode.ErrorIfExists).parquet(dir.toString)
       val rel = f.listStatus(dir)
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map(st => s"_changes/$uuid-$kind/${st.getPath.getName}").toSeq.sorted

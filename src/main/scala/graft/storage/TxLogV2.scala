@@ -2139,7 +2139,7 @@ object TxLogWriterFactory {
         TxRowId.GridCol, org.apache.spark.sql.types.LongType, nullable = true))
     val physSchema = TxLog.physicalSchemaOf(schemaW, cm)
     val (owf, conf, ext) = GraftParquetIO.writerFactory(spark, physSchema,
-      TxBloom.writeOptions(props))
+      LocalFs.WriteOptions ++ TxBloom.writeOptions(props))
     // CHECK constraints ride to the executors as bound predicates —
     // every V2 path (append, streaming epoch, Spark-planned DML
     // rewrite) validates per row BEFORE its file is staged; they bind

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the set of runnable mains and session builders from growing back:
   * one-off probes belong in `graft.tools.Probe` or `perfbench/`, every
-  * session is built through [[GraftSession.local]], and every parquet read
-  * is given its schema. */
+  * session is built through [[GraftSession.local]], every parquet read
+  * is given its schema, and every ETL and storage file write creates its
+  * local files through `graft.storage.LocalFs`. */
 class EntryPointLintSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(Path, Seq[String])] = {
@@ -62,5 +63,66 @@ class EntryPointLintSpec extends AnyFunSuite {
       if line.contains(".read.parquet(") && !isComment(line)
     } yield s"${path.getFileName}:${i + 1}"
     assert(sites.isEmpty, sites)
+  }
+
+  test("every ETL and storage file write passes LocalFs.WriteOptions") {
+    // without them Hadoop's local file system runs a chmod process per
+    // file and directory the write creates
+    val sites = for {
+      (path, lines) <- sources
+      if path.toString.contains("graft/etl/") || path.toString.contains("graft/storage/")
+      line <- EntryPointLintSpec.unguardedWrites(lines.filterNot(isComment))
+    } yield s"${path.getFileName}: $line"
+    assert(sites.isEmpty, sites)
+  }
+
+  test("the write lint finds an unguarded writer chain, one line or several") {
+    val code = Seq(
+      "df.write.options(LocalFs.WriteOptions).mode(\"append\").csv(out)",
+      "df.write.mode(\"append\").text(out)",
+      "df",
+      "  .write.options(LocalFs.WriteOptions)",
+      "  .parquet(dir)",
+      "df.write",
+      "  .mode(SaveMode.ErrorIfExists).parquet(dir)",
+      "out.write(bytes)",
+      "import org.apache.spark.sql.connector.write.{BatchWrite, Write}",
+      "GraftParquetIO.writerFactory(spark, schema,",
+      "  LocalFs.WriteOptions ++ extra)",
+      "GraftParquetIO.writerFactory(spark, schema, extra)")
+    assert(EntryPointLintSpec.unguardedWrites(code) == Seq(
+      "df.write.mode(\"append\").text(out)",
+      "df.write",
+      "GraftParquetIO.writerFactory(spark, schema, extra)"))
+  }
+}
+
+object EntryPointLintSpec {
+  private val writerChain = """\.write\s*\.\s*[a-z]""".r
+  private val writerEnd = """\.(?:parquet|csv|text|json|orc|save|saveAsTable|insertInto)\s*\(""".r
+  private val factoryCall = """GraftParquetIO\.writerFactory\(""".r
+
+  /** The first line of each `DataFrameWriter` chain (from `.write` to the
+    * call that names the output) and of each executor-side parquet writer
+    * factory in `lines` that does not pass `LocalFs.WriteOptions`. */
+  def unguardedWrites(lines: Seq[String]): Seq[String] = {
+    val text = lines.mkString("\n")
+    def lineAt(i: Int): String = lines(text.substring(0, i).count(_ == '\n')).trim
+    val chains = writerChain.findAllMatchIn(text).map { m =>
+      val end = writerEnd.findFirstMatchIn(text.substring(m.start)).fold(text.length)(m.start + _.end)
+      (m.start, text.substring(m.start, end))
+    }
+    val factories = factoryCall.findAllMatchIn(text).map { m =>
+      var depth = 1
+      var i = m.end
+      while (i < text.length && depth > 0) {
+        if (text(i) == '(') depth += 1 else if (text(i) == ')') depth -= 1
+        i += 1
+      }
+      (m.start, text.substring(m.start, i))
+    }
+    (chains ++ factories).toSeq.sortBy(_._1).collect {
+      case (at, call) if !call.contains("LocalFs.WriteOptions") => lineAt(at)
+    }
   }
 }
