@@ -3,7 +3,7 @@ package graft.etl
 /** Python-compatible text rendering for fidelity-mode CSV output
   * (SURVEY.md §7.4): the reference writes CSV via Python, so floats render
   * as `repr(float)` (shortest round-trip, e-notation outside
-  * [1e-4, 1e16)) and booleans as `True`/`False`.
+  * [1e-4, 1e16)).
   *
   * Golden comparisons are value-level, so this is best-effort textual
   * parity: JDK 17's Double.toString is round-trip-safe but not always
@@ -11,8 +11,6 @@ package graft.etl
   * Java and Python disagree structurally.
   */
 object PyFormat {
-
-  def pyBool(b: Boolean): String = if (b) "True" else "False"
 
   def pyFloatRepr(d: Double): String = {
     if (d.isNaN) return "nan"

@@ -12,10 +12,6 @@ object Signatures extends Serializable {
 
   val P: Long = 2147483647L // 2^31-1
 
-  /** 31-bit positive token hash. */
-  @inline def h31(s: String): Long =
-    (MurmurHash3.stringHash(s, 0x9747b28c) & 0x7fffffff).toLong
-
   /** Word n-gram shingle hashes in one pass (shingle strings are never
     * materialized — the hash of the joined window is computed directly). */
   def shingleHashes(toks: Seq[String], n: Int): Array[Long] = {

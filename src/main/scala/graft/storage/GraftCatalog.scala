@@ -754,7 +754,7 @@ private[storage] class GraftStagedTable(spark: SparkSession, ident: Identifier,
       // before any manifest exists (mapping is identity at birth)
       val stats = TxLog.collectStats(spark, dir.toString, rel, props,
         TxLog.ColMap(Seq.empty, Seq.empty))
-      publish(rel, stats, writeSchema)
+      publishTable(rel, stats, writeSchema)
       ()
     }
 
@@ -762,8 +762,8 @@ private[storage] class GraftStagedTable(spark: SparkSession, ident: Identifier,
       TxLogWriterFactory.deleteStaged(spark, dir.toString, messages)
   }
 
-  private def publish(rel: Seq[String], stats: Seq[TxStats.FileStats],
-                      schema: StructType): Unit = {
+  private def publishTable(rel: Seq[String], stats: Seq[TxStats.FileStats],
+                           schema: StructType): Unit = {
     if (replaceExisting)
       TxLog.overwriteStaged(spark, dir.toString, rel, stats, TxLog.ddlOf(schema),
         pcolsOverride = Some(pcols), propsOverride = Some(props))
@@ -773,7 +773,7 @@ private[storage] class GraftStagedTable(spark: SparkSession, ident: Identifier,
   }
 
   override def commitStagedChanges(): Unit =
-    if (!written) publish(Seq.empty, Seq.empty, tableSchema)
+    if (!written) publishTable(Seq.empty, Seq.empty, tableSchema)
 
   override def abortStagedChanges(): Unit = {
     val f = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)

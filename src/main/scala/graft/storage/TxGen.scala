@@ -103,11 +103,6 @@ object TxGen {
     (cond, childOut)
   }
 
-  /** The LOGICAL column names a generation expression reads. */
-  private def refsOf(s: SparkSession, schema: StructType, name: String,
-                     sql: String): Set[String] =
-    resolve(s, schema, name, sql)._1.references.map(_.name).toSet
-
   /** Per-column (logical target, declared type, cast-wrapped resolved
     * expression, relation attrs) for `props`' declarations against
     * `schema` (LOGICAL names) under mapping `cm`. Validates everything
@@ -149,20 +144,6 @@ object TxGen {
   def validateDeclared(s: SparkSession, schema: StructType, cm: TxLog.ColMap,
                        props: Map[String, String]): Unit = {
     resolved(s, schema, cm, props); ()
-  }
-
-  /** True when `logical` is a SOURCE column of any declared generation
-    * expression — rename/drop/widen of such a column is refused (the
-    * stored expression text would silently break or change meaning). */
-  def isGenerationSource(s: SparkSession, schema: StructType, cm: TxLog.ColMap,
-                         props: Map[String, String], logical: String): Boolean = {
-    val gens = liveGens(cm, props)
-    if (gens.isEmpty) return false
-    gens.exists { case (phys, sql) =>
-      val rev = TxLog.logicalNameMap(cm)
-      refsOf(s, schema, rev.getOrElse(phys, phys), sql)
-        .exists(_.equalsIgnoreCase(logical))
-    }
   }
 
   /** The LOGICAL names of the live generated columns themselves. */
@@ -261,16 +242,6 @@ object TxGen {
       proj(row)
     }
   }
-
-  /** Guard for a write whose schema must carry every generated column —
-    * the driver-side fast-fail twin of [[bound]]'s require (used where
-    * only the schema is at hand). */
-  def requirePresent(schema: StructType, cm: TxLog.ColMap,
-                     props: Map[String, String]): Unit =
-    generatedLogicals(cm, props).foreach { g =>
-      require(schema.fieldNames.exists(_.equalsIgnoreCase(g)),
-        s"write schema omits generated column $g: ${schema.simpleString}")
-    }
 
   /** Overwrite/REPLACE contract reset (the [[TxLog]] `resetDefaultProps`
     * pattern): re-key each generation declaration through the OLD

@@ -396,14 +396,14 @@ object TxLog {
     // the TRUE head — a stale base would let same-name manifests of a
     // dropped predecessor pollute the new lineage
     var base = -1L
-    commitMetadata(s, table, s"createBranch('$name')") { (all, v) =>
+    casCommit(s, table, s"createBranch('$name')") { (all, v) =>
       require(all.nonEmpty, s"not a txlog table: $table")
       val main = mainLineage(all)
       val props = propsFrom(main)
       require(!branchesFrom(props).contains(name),
         s"branch '$name' already exists on $table (fastForward or dropBranch it)")
       base = main.last.version
-      Some(metadataManifest(v, "branch-create",
+      Right(metadataManifest(v, "branch-create",
         props + (BranchPropPrefix + name -> base.toString)))
     }
     base
@@ -414,17 +414,17 @@ object TxLog {
     * sweep). Idempotent — dropping an absent branch is a no-op. */
   def dropBranch(s: SparkSession, table: String, name: String): Long = {
     guardMainOnly("dropBranch")
-    commitMetadata(s, table, s"dropBranch('$name')") { (all, v) =>
+    casCommit(s, table, s"dropBranch('$name')") { (all, v) =>
       require(all.nonEmpty, s"not a txlog table: $table")
       val props = propsFrom(mainLineage(all))
-      if (!branchesFrom(props).contains(name)) None
+      if (!branchesFrom(props).contains(name)) Left(-1L)
       // record the rid HIGH-WATER in the drop manifest: the dropped
       // branch's commits become FOREIGN and vacuum collects them on age
       // alone — if they held the highest minted ranges, a post-sweep
       // commit would re-mint ids consumers captured from the branch
       // before the drop. The drop manifest is main-lineage and survives
       // (or is absorbed by) every checkpoint, so the water holds.
-      else Some(metadataManifest(v, "branch-drop", props - (BranchPropPrefix + name))
+      else Right(metadataManifest(v, "branch-drop", props - (BranchPropPrefix + name))
         .copy(nextRid = nextRowId(all)))
     }
   }
@@ -439,7 +439,7 @@ object TxLog {
     * ff commit's version. */
   def fastForward(s: SparkSession, table: String, name: String): Long = {
     guardMainOnly("fastForward")
-    commitMetadata(s, table, s"fastForward('$name')") { (all, v) =>
+    casCommit(s, table, s"fastForward('$name')") { (all, v) =>
       require(all.nonEmpty, s"not a txlog table: $table")
       val main = mainLineage(all)
       val props = propsFrom(main)
@@ -453,38 +453,61 @@ object TxLog {
       val adopted = all.iterator.filter(_.branch.isEmpty).flatMap(_.adopts).toSet
       val adopts = all.filter(m => m.branch.contains(name) &&
         m.version > base && !adopted(m.version)).map(_.version)
-      Some(metadataManifest(v, "branch-ff", props - (BranchPropPrefix + name))
+      Right(metadataManifest(v, "branch-ff", props - (BranchPropPrefix + name))
         .copy(adopts = adopts))
     }
   }
 
-  /** One METADATA-ONLY transaction (properties, branch bookkeeping) as
-    * an optimistic CAS loop. Each attempt takes ONE listing, so the
-    * state `next` reads and the version slot `v` it publishes into come
+  /** Version races a commit may lose before [[casCommit]] gives up. */
+  private val MaxVersionRaces = 20
+
+  /** THE commit loop: every transaction publishes through here, as an
+    * optimistic CAS. Each attempt takes ONE listing, so the state
+    * `attempt` reads and the version slot `v` it publishes into come
     * from the same instant — a successful put proves the read was
-    * current (the slot is allocated GLOBALLY: branch commits share the
-    * log). `next` returns the manifest to publish at `v`, or None when
-    * there is nothing to commit (-1). A lost slot race re-lists and
-    * re-derives, so concurrent updates compose instead of
-    * last-writer-wins. Returns the published version. */
-  private def commitMetadata(s: SparkSession, table: String, op: String)(
-      next: (Seq[Manifest], Long) => Option[Manifest]): Long = {
+    * current. The slot is allocated GLOBALLY (head of the listing + 1):
+    * the shared linear log arbitrates every lineage, so a branch commit
+    * takes the next slot even when its lineage head is older.
+    * `attempt` returns `Right(m)` to put `m` at `v`, or `Left(r)` to
+    * return `r` without publishing (-1 for a taken token or nothing to
+    * commit, the fast-forward's version when [[mergeBranch]] delegates);
+    * it throws to refuse. A lost put lists again and re-runs
+    * `attempt`, so concurrent commits compose (or conflict loudly)
+    * instead of last-writer-wins; state an attempt must carry across
+    * races (rebase bases, capture memos) lives in the caller's vars.
+    * Returns the published version.
+    *
+    * Correctness of the exactly-once token under twin writers (a
+    * zombie driver replaying the same (writerId, batchId) concurrently
+    * with its replacement): BOTH the token check and the head version
+    * come from ONE listing per attempt — two listings would open a
+    * TOCTOU window where the twin publishes between them and this
+    * writer then lands the same token in the next free slot. With one
+    * listing the argument closes: a successful put targets
+    * head(listing)+1, so if the twin's manifest preceded the listing
+    * the attempt returns −1; if it landed after, it occupies a slot ≥
+    * our target → our put either loses that exact slot or loses a slot
+    * to a third writer below it; every lost put re-lists, and that
+    * listing now includes the twin's token → −1. Two same-token
+    * manifests can never both publish. */
+  private def casCommit(s: SparkSession, table: String, op: String)(
+      attempt: (Seq[Manifest], Long) => Either[Long, Manifest]): Long = {
     val root = new Path(table)
     val f = fs(s, root)
     val logDir = new Path(root, LogDir)
     var last = -1L
-    for (_ <- 0 until 20) {
+    for (_ <- 0 until MaxVersionRaces) {
       val all = allManifests(s, table)
       val v = all.lastOption.map(_.version).getOrElse(-1L) + 1
-      next(all, v) match {
-        case None => return -1L
-        case Some(m) =>
+      attempt(all, v) match {
+        case Left(r) => return r
+        case Right(m) =>
           if (publish(f, logDir, m)) return v
           last = v
       }
     }
     throw new IllegalStateException(
-      s"$op on $table lost 20 version races (last tried v$last)")
+      s"$op on $table lost $MaxVersionRaces version races (last tried v$last)")
   }
 
   /** A metadata-only manifest at `v` recording the full property map. */
@@ -605,7 +628,6 @@ object TxLog {
   def mergeBranch(s: SparkSession, table: String, name: String,
                   beforeCommit: () => Unit = () => ()): Long = {
     guardMainOnly("mergeBranch")
-    var attempt = 0
     // capture memo KEYED by (base, branch head): a lost slot race
     // re-validates but must not re-stage — yet if the branch is
     // dropped and recreated under the same name between attempts,
@@ -620,8 +642,7 @@ object TxLog {
     // like any pre-conflict staging); a lost slot race with an unmoved
     // main re-validates without re-staging
     var rowResolved: Option[((Long, Long, Long), RowMergeRes)] = None
-    while (attempt < 20) {
-      val all = allManifests(s, table)
+    casCommit(s, table, s"mergeBranch('$name')") { (all, v) =>
       require(all.nonEmpty, s"not a txlog table: $table")
       val main = mainLineage(all)
       val props = propsFrom(main)
@@ -630,138 +651,132 @@ object TxLog {
       // without it, delegate: a true fast-forward is strictly better
       // (history adoption)
       val diverged = main.filter(m => m.version > base && !branchBookkeeping(m))
-      if (diverged.isEmpty) return fastForward(s, table, name)
-      require(props.get(IsolationProp).contains(IsolationWriteSerializable),
-        s"mergeBranch('$name') on $table: main diverged past the base " +
-          s"v$base and the table is SERIALIZABLE — the merge is a " +
-          s"write-serializable rebase; set $IsolationProp=" +
-          s"$IsolationWriteSerializable to accept it, or re-run the work " +
-          "on a fresh branch")
-      // each refusal names its own remedy: unresolvable-in-place cases
-      // say "re-run on a fresh branch"; the branch-debt case names the
-      // in-place materialization instead (a fresh branch is NOT needed)
-      def conflict(why: String) = throw new java.util.ConcurrentModificationException(
-        s"cannot merge branch '$name' into $table: $why")
-      def freshBranch(why: String) =
-        conflict(s"$why — re-run the work on a fresh branch")
-      diverged.find(_.checkpoint).foreach(m => freshBranch(
-        s"main checkpointed at v${m.version} (live set replaced)"))
-      diverged.find(_.cmap.isDefined).foreach(m => freshBranch(
-        s"main changed the column mapping at v${m.version}"))
-      diverged.find(m => m.eqdels.nonEmpty || m.eqdrops.nonEmpty).foreach(m =>
-        freshBranch(s"main committed equality deletes at v${m.version} " +
-          "(key-addressed — row overlap with the branch is unknowable)"))
-      val fork = mainLineage(all.filter(_.version <= base))
-      val bl = branchLineage(all, name, table)
-      if (liveEqDels(fork).nonEmpty)
-        freshBranch("live equality-delete debt at the fork (both lineages " +
-          "would re-interpret it) — materialize the debt on main first")
-      if (liveEqDels(bl).nonEmpty)
-        conflict("live equality-delete debt on the branch — materialize " +
-          "it in place (onBranch { materializeEqDels } or CALL " +
-          "system.merge_branch(..., materialize => true)) and retry")
-      val baseLive = liveFiles(fork).toSet
-      val brLive = liveFiles(bl).toSet
-      val netFiles = (brLive -- baseLive).toSeq.sorted
-      val netRemoves = (baseLive -- brLive).toSeq.sorted
-      val baseDvs = liveDvs(fork)
-      val brDvs = liveDvs(bl)
-      val dvChanged = (brLive & baseLive).filter(fl =>
-        brDvs.get(fl).map(_.p) != baseDvs.get(fl).map(_.p)).toSeq.sorted
-      val netDvs = (netFiles ++ dvChanged).flatMap(brDvs.get).sortBy(_.f)
-      if (netFiles.isEmpty && netRemoves.isEmpty && netDvs.isEmpty)
-        // row-empty branch over a diverged main: nothing to rebase —
-        // drop resolves it (metadata-only branches cannot ff either)
-        conflict("the branch carries no row changes but main diverged; " +
-          "dropBranch it")
-      // same-file footprint overlap vs main's divergent commits — the
-      // r20 bounded ROW merge ([[resolveRowMerge]]): provably
-      // row-disjoint edits resolve at row granularity instead of
-      // refusing; overlapping rows and rewrite-vs-rewrite still refuse
-      val touchedBr = (netRemoves ++ dvChanged).toSet
-      val overlap = (diverged.flatMap(_.removes) ++
-        diverged.flatMap(_.dvs.map(_.f))).distinct.filter(touchedBr).sorted
-      val rmKey = (base, bl.last.version, main.last.version)
-      val res =
-        if (overlap.isEmpty) RowMergeRes.empty
-        else rowResolved.collect { case (k, r) if k == rmKey => r }
-          .getOrElse {
-            val r = resolveRowMerge(s, table, fork, bl, main, diverged,
-              overlap, netFiles, netRemoves, baseDvs, brDvs, conflict)
-            rowResolved = Some((rmKey, r)); r
-          }
-      // main may have removed/DV'd OTHER base files — the merged live
-      // set follows main for those (the branch never read them is NOT
-      // knowable; writeSerializable accepts exactly this skew)
-      // schema: one-sided evolution adopts, both-sided merges loudly
-      val mainSch = tableSchemaFrom(main)
-      val brSch = tableSchemaFrom(bl)
-      val forkSch = tableSchemaFrom(fork)
-      val schemaDdl = (mainSch, brSch) match {
-        case (Some(a), Some(b)) =>
-          if (ddlOf(b) == forkSch.map(ddlOf).getOrElse("")) ddlOf(a)
-          else if (ddlOf(a) == forkSch.map(ddlOf).getOrElse("")) ddlOf(b)
-          else ddlOf(mergedSchema(a, b))
-        case _ => (brSch orElse mainSch).map(ddlOf).getOrElse(
-          throw new IllegalStateException(s"$table has no recorded schema"))
+      if (diverged.isEmpty) Left(fastForward(s, table, name))
+      else {
+        require(props.get(IsolationProp).contains(IsolationWriteSerializable),
+          s"mergeBranch('$name') on $table: main diverged past the base " +
+            s"v$base and the table is SERIALIZABLE — the merge is a " +
+            s"write-serializable rebase; set $IsolationProp=" +
+            s"$IsolationWriteSerializable to accept it, or re-run the work " +
+            "on a fresh branch")
+        // each refusal names its own remedy: unresolvable-in-place cases
+        // say "re-run on a fresh branch"; the branch-debt case names the
+        // in-place materialization instead (a fresh branch is NOT needed)
+        def conflict(why: String) = throw new java.util.ConcurrentModificationException(
+          s"cannot merge branch '$name' into $table: $why")
+        def freshBranch(why: String) =
+          conflict(s"$why — re-run the work on a fresh branch")
+        diverged.find(_.checkpoint).foreach(m => freshBranch(
+          s"main checkpointed at v${m.version} (live set replaced)"))
+        diverged.find(_.cmap.isDefined).foreach(m => freshBranch(
+          s"main changed the column mapping at v${m.version}"))
+        diverged.find(m => m.eqdels.nonEmpty || m.eqdrops.nonEmpty).foreach(m =>
+          freshBranch(s"main committed equality deletes at v${m.version} " +
+            "(key-addressed — row overlap with the branch is unknowable)"))
+        val fork = mainLineage(all.filter(_.version <= base))
+        val bl = branchLineage(all, name, table)
+        if (liveEqDels(fork).nonEmpty)
+          freshBranch("live equality-delete debt at the fork (both lineages " +
+            "would re-interpret it) — materialize the debt on main first")
+        if (liveEqDels(bl).nonEmpty)
+          conflict("live equality-delete debt on the branch — materialize " +
+            "it in place (onBranch { materializeEqDels } or CALL " +
+            "system.merge_branch(..., materialize => true)) and retry")
+        val baseLive = liveFiles(fork).toSet
+        val brLive = liveFiles(bl).toSet
+        val netFiles = (brLive -- baseLive).toSeq.sorted
+        val netRemoves = (baseLive -- brLive).toSeq.sorted
+        val baseDvs = liveDvs(fork)
+        val brDvs = liveDvs(bl)
+        val dvChanged = (brLive & baseLive).filter(fl =>
+          brDvs.get(fl).map(_.p) != baseDvs.get(fl).map(_.p)).toSeq.sorted
+        val netDvs = (netFiles ++ dvChanged).flatMap(brDvs.get).sortBy(_.f)
+        if (netFiles.isEmpty && netRemoves.isEmpty && netDvs.isEmpty)
+          // row-empty branch over a diverged main: nothing to rebase —
+          // drop resolves it (metadata-only branches cannot ff either)
+          conflict("the branch carries no row changes but main diverged; " +
+            "dropBranch it")
+        // same-file footprint overlap vs main's divergent commits — the
+        // r20 bounded ROW merge ([[resolveRowMerge]]): provably
+        // row-disjoint edits resolve at row granularity instead of
+        // refusing; overlapping rows and rewrite-vs-rewrite still refuse
+        val touchedBr = (netRemoves ++ dvChanged).toSet
+        val overlap = (diverged.flatMap(_.removes) ++
+          diverged.flatMap(_.dvs.map(_.f))).distinct.filter(touchedBr).sorted
+        val rmKey = (base, bl.last.version, main.last.version)
+        val res =
+          if (overlap.isEmpty) RowMergeRes.empty
+          else rowResolved.collect { case (k, r) if k == rmKey => r }
+            .getOrElse {
+              val r = resolveRowMerge(s, table, fork, bl, main, diverged,
+                overlap, netFiles, netRemoves, baseDvs, brDvs, conflict)
+              rowResolved = Some((rmKey, r)); r
+            }
+        // main may have removed/DV'd OTHER base files — the merged live
+        // set follows main for those (the branch never read them is NOT
+        // knowable; writeSerializable accepts exactly this skew)
+        // schema: one-sided evolution adopts, both-sided merges loudly
+        val mainSch = tableSchemaFrom(main)
+        val brSch = tableSchemaFrom(bl)
+        val forkSch = tableSchemaFrom(fork)
+        val schemaDdl = (mainSch, brSch) match {
+          case (Some(a), Some(b)) =>
+            if (ddlOf(b) == forkSch.map(ddlOf).getOrElse("")) ddlOf(a)
+            else if (ddlOf(a) == forkSch.map(ddlOf).getOrElse("")) ddlOf(b)
+            else ddlOf(mergedSchema(a, b))
+          case _ => (brSch orElse mainSch).map(ddlOf).getOrElse(
+            throw new IllegalStateException(s"$table has no recorded schema"))
+        }
+        // branch writers' exactly-once tokens ABSORB into the merge
+        // commit (their manifests become foreign): per-writer high-water,
+        // the same absorption rule checkpoints use
+        val tokens = bl.filter(m => m.branch.contains(name))
+          .filterNot(m => singleUseWriter(m.writerId))
+          .groupBy(_.writerId).view.mapValues(_.map(_.batchId).max)
+          .toSeq.sorted
+        // apply the row-merge resolution to the net delta: replacement
+        // vectors supersede same-file net DVs (and may target main-live
+        // files), fully-covered files leave as removes / leave `files`
+        val mergedFiles = netFiles.filterNot(res.netFileDead)
+        val mergedRemoves = (netRemoves ++ res.extraRemoves).sorted
+        val mergedDvs = (netDvs.filterNot(d => res.drop(d.f) ||
+          res.replace.contains(d.f) || res.netFileDead(d.f)) ++
+          res.replace.values).sortBy(_.f)
+        // stats (row-id allocations included) ride verbatim from the
+        // branch manifests — ids stay globally unique, minted once
+        val brStats = bl.flatMap(_.stats).map(st => st.file -> st).toMap
+        val stats = mergedFiles.flatMap(brStats.get)
+        // net row-level capture on feed tables (captured once; a lost
+        // slot race re-validates but must not re-stage)
+        val feedOn = props.get(ChangeFeedProp).contains("true")
+        val captureKey = (base, bl.last.version)
+        val changes =
+          if (!feedOn) Seq.empty
+          else captured.collect { case (k, c) if k == captureKey => c }
+            .getOrElse {
+              val c = mergeCapture(s, table, fork, bl, netRemoves, netFiles,
+                dvChanged, baseDvs, brDvs, schemaDdl)
+              captured = Some((captureKey, c)); c
+            }
+        val merged = (props - (BranchPropPrefix + name)).toSeq.sorted
+        // the capture diffed fork-vs-branch state, which no CONCURRENT
+        // main commit can invalidate (both inputs are frozen lineages) —
+        // but the conflict rules above re-judge per attempt
+        // record the rid high-water like dropBranch does: the branch's
+        // manifests become foreign (vacuum-collectable) at merge, and
+        // branch-internal churn files can hold the highest minted ranges
+        // with no surviving stats — the marker makes the high-water
+        // locally durable instead of resting on sweep/checkpoint ordering
+        val m = Manifest(v, mergedFiles,
+          writerId = s"branch-merge-${java.util.UUID.randomUUID()}", batchId = 0L,
+          checkpoint = false, stats = stats, removes = mergedRemoves,
+          schema = Some(schemaDdl), tokens = tokens, changes = changes,
+          props = Some(merged), ts = commitTimeMs(), dvs = mergedDvs,
+          nextRid = nextRowId(all))
+        beforeCommit() // crash/interleave injection seam
+        Right(m)
       }
-      // branch writers' exactly-once tokens ABSORB into the merge
-      // commit (their manifests become foreign): per-writer high-water,
-      // the same absorption rule checkpoints use
-      val tokens = bl.filter(m => m.branch.contains(name))
-        .filterNot(m => singleUseWriter(m.writerId))
-        .groupBy(_.writerId).view.mapValues(_.map(_.batchId).max)
-        .toSeq.sorted
-      // apply the row-merge resolution to the net delta: replacement
-      // vectors supersede same-file net DVs (and may target main-live
-      // files), fully-covered files leave as removes / leave `files`
-      val mergedFiles = netFiles.filterNot(res.netFileDead)
-      val mergedRemoves = (netRemoves ++ res.extraRemoves).sorted
-      val mergedDvs = (netDvs.filterNot(d => res.drop(d.f) ||
-        res.replace.contains(d.f) || res.netFileDead(d.f)) ++
-        res.replace.values).sortBy(_.f)
-      // stats (row-id allocations included) ride verbatim from the
-      // branch manifests — ids stay globally unique, minted once
-      val brStats = bl.flatMap(_.stats).map(st => st.file -> st).toMap
-      val stats = mergedFiles.flatMap(brStats.get)
-      // net row-level capture on feed tables (captured once; a lost
-      // slot race re-validates but must not re-stage)
-      val feedOn = props.get(ChangeFeedProp).contains("true")
-      val captureKey = (base, bl.last.version)
-      val changes =
-        if (!feedOn) Seq.empty
-        else captured.collect { case (k, c) if k == captureKey => c }
-          .getOrElse {
-            val c = mergeCapture(s, table, fork, bl, netRemoves, netFiles,
-              dvChanged, baseDvs, brDvs, schemaDdl)
-            captured = Some((captureKey, c)); c
-          }
-      val merged = (props - (BranchPropPrefix + name)).toSeq.sorted
-      val v = all.last.version + 1
-      val root = new Path(table)
-      val f = fs(s, root)
-      val logDir = new Path(root, LogDir)
-      // the capture diffed fork-vs-branch state, which no CONCURRENT
-      // main commit can invalidate (both inputs are frozen lineages) —
-      // but the conflict rules above re-judge per attempt
-      // record the rid high-water like dropBranch does: the branch's
-      // manifests become foreign (vacuum-collectable) at merge, and
-      // branch-internal churn files can hold the highest minted ranges
-      // with no surviving stats — the marker makes the high-water
-      // locally durable instead of resting on sweep/checkpoint ordering
-      val m = Manifest(v, mergedFiles,
-        writerId = s"branch-merge-${java.util.UUID.randomUUID()}", batchId = 0L,
-        checkpoint = false, stats = stats, removes = mergedRemoves,
-        schema = Some(schemaDdl), tokens = tokens, changes = changes,
-        props = Some(merged), ts = commitTimeMs(), dvs = mergedDvs,
-        nextRid = nextRowId(all))
-      beforeCommit() // crash/interleave injection seam
-      if (publish(f, logDir, m))
-        return v
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"mergeBranch('$name') on $table lost 20 version races")
   }
 
   /** The merge's net row-level delta ([[mergeBranch]], feed tables):
@@ -1262,7 +1277,7 @@ object TxLog {
                   batchId: Long): Long = {
     guardWriterId(writerId)
     commitManifest(s, table, Seq.empty, Seq.empty, writerId, batchId,
-      checkpoint = false, maxRetries = 20)
+      checkpoint = false)
   }
 
   /** Snapshot read: exactly the committed file set, handed to the
@@ -1998,8 +2013,8 @@ object TxLog {
         TxGen.validateDeclared(s, sch, colMapFrom(msG), set))
     }
     guardMainOnly("setProperties")
-    commitMetadata(s, table, "setProperties") { (all, v) =>
-      Some(metadataManifest(v, "props", propsFrom(mainLineage(all)) ++ set))
+    casCommit(s, table, "setProperties") { (all, v) =>
+      Right(metadataManifest(v, "props", propsFrom(mainLineage(all)) ++ set))
     }
   }
 
@@ -2016,11 +2031,11 @@ object TxLog {
   private[storage] def mergeProperty(s: SparkSession, table: String, key: String,
                                      merge: Option[String] => String): Long = {
     guardMainOnly("mergeProperty")
-    commitMetadata(s, table, s"mergeProperty($key)") { (all, v) =>
+    casCommit(s, table, s"mergeProperty($key)") { (all, v) =>
       val props = propsFrom(mainLineage(all))
       val next = merge(props.get(key))
-      if (props.get(key).contains(next)) None
-      else Some(metadataManifest(v, "props", props + (key -> next)))
+      if (props.get(key).contains(next)) Left(-1L)
+      else Right(metadataManifest(v, "props", props + (key -> next)))
     }
   }
 
@@ -2040,8 +2055,8 @@ object TxLog {
         "silently flip the column's pre-evolution reads from the default to " +
         "null) — DROP the column instead")
     guardMainOnly("removeProperties")
-    commitMetadata(s, table, "removeProperties") { (all, v) =>
-      Some(metadataManifest(v, "props", propsFrom(mainLineage(all)) -- keys))
+    casCommit(s, table, "removeProperties") { (all, v) =>
+      Right(metadataManifest(v, "props", propsFrom(mainLineage(all)) -- keys))
     }
   }
 
@@ -2098,20 +2113,17 @@ object TxLog {
                                  props: Map[String, String]): Long = {
     guardReservedCols(schema) // CTAS reaches here without createTable
     TxGen.validateDeclared(s, schema, ColMap(Seq.empty, Seq.empty), props)
-    val root = new Path(table)
-    val f = fs(s, root)
-    if (manifests(s, table).nonEmpty)
-      throw new IllegalStateException(s"txlog table $table already exists")
-    val logDir = new Path(root, LogDir)
-    val m = Manifest(0L, rel,
-      writerId = s"create-${java.util.UUID.randomUUID()}", batchId = 0L,
-      checkpoint = false, stats = assignRowIds(Seq.empty, rel, stats),
-      schema = Some(ddlOf(schema)), pcols = partitionBy,
-      props = if (props.isEmpty) None else Some(props.toSeq.sorted),
-      ts = commitTimeMs())
-    if (!publish(f, logDir, m))
-      throw new IllegalStateException(s"txlog table $table already exists")
-    0L
+    // a lost put at v0 lists again and finds the winner's manifest
+    casCommit(s, table, "createTable") { (all, v) =>
+      if (all.nonEmpty)
+        throw new IllegalStateException(s"txlog table $table already exists")
+      Right(Manifest(v, rel,
+        writerId = s"create-${java.util.UUID.randomUUID()}", batchId = 0L,
+        checkpoint = false, stats = assignRowIds(Seq.empty, rel, stats),
+        schema = Some(ddlOf(schema)), pcols = partitionBy,
+        props = if (props.isEmpty) None else Some(props.toSeq.sorted),
+        ts = commitTimeMs()))
+    }
   }
 
   /** ALTER TABLE ADD COLUMNS as a metadata-only transaction: commit an
@@ -2124,7 +2136,7 @@ object TxLog {
                    incoming: org.apache.spark.sql.types.StructType): Long =
     commitManifest(s, table, Seq.empty, Seq.empty,
       writerId = s"evolve-${java.util.UUID.randomUUID()}", batchId = 0L,
-      checkpoint = false, maxRetries = 20, incoming = Some(incoming))
+      checkpoint = false, incoming = Some(incoming))
 
   /** ALTER TABLE ADD COLUMN ... DEFAULT — ONE metadata-only
     * transaction carrying the evolved schema, the minted mapping entry
@@ -2155,7 +2167,7 @@ object TxLog {
         org.apache.spark.sql.types.StructField(name, dt, nullable = nullable))
     commitManifest(s, table, Seq.empty, Seq.empty,
       writerId = s"evolve-${java.util.UUID.randomUUID()}", batchId = 0L,
-      checkpoint = false, maxRetries = 20, incoming = Some(incoming),
+      checkpoint = false, incoming = Some(incoming),
       addDefault = Some(name -> lit))
   }
 
@@ -2278,15 +2290,9 @@ object TxLog {
   private def commitColMap(s: SparkSession, table: String, op: String,
                            change: (org.apache.spark.sql.types.StructType, ColMap)
                              => (org.apache.spark.sql.types.StructType, ColMap),
-                           maxRetries: Int = 20,
                            widPrefix: String = "colmap"): Long = {
     guardMainOnly(s"ALTER COLUMN ($op)")
-    val root = new Path(table)
-    val f = fs(s, root)
-    val logDir = new Path(root, LogDir)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val all = allManifests(s, table) // ONE listing: state + slot together
+    casCommit(s, table, s"$op column") { (all, v) =>
       val ms = mainLineage(all)
       val logical = tableSchemaFrom(ms).getOrElse(throw new IllegalStateException(
         s"$op column on $table: no recorded schema (legacy log — " +
@@ -2358,16 +2364,11 @@ object TxLog {
       val propsOut: Option[Seq[(String, String)]] =
         if (reRendered.isEmpty) None
         else Some((props ++ reRendered).toSeq.sorted)
-      val v = all.lastOption.map(_.version).getOrElse(-1L) + 1
-      val m = Manifest(v, Seq.empty,
+      Right(Manifest(v, Seq.empty,
         writerId = s"$widPrefix-${java.util.UUID.randomUUID()}", batchId = 0L,
         checkpoint = false, schema = Some(ddlOf(newSchema)),
-        cmap = Some(newCm), props = propsOut, ts = commitTimeMs())
-      if (publish(f, logDir, m)) return v
-      attempt += 1
+        cmap = Some(newCm), props = propsOut, ts = commitTimeMs()))
     }
-    throw new IllegalStateException(
-      s"$op column on $table lost $maxRetries version races")
   }
 
   /** The table's declared partition columns (empty = unpartitioned). */
@@ -2687,20 +2688,20 @@ object TxLog {
     * previous attempt crashed at ANY point. Returns the committed
     * version, or -1 if the token had already committed. */
   def commit(df: DataFrame, table: String, writerId: String,
-             batchId: Long, maxRetries: Int = 20): Long = {
+             batchId: Long): Long = {
     guardWriterId(writerId)
-    commitInternal(df, table, writerId, batchId, maxRetries)
+    commitInternal(df, table, writerId, batchId)
   }
 
   /** [[commit]] minus the reserved-prefix guard — for ENGINE callers
     * (the data source's batch/INSERT/streaming writers) that mint
     * single-use or stream-derived ids by construction. */
   private[graft] def commitInternal(df: DataFrame, table: String, writerId: String,
-                                    batchId: Long, maxRetries: Int = 20): Long = {
+                                    batchId: Long): Long = {
     val s = df.sparkSession
     // pre-flight token check saves the data write on a clean replay;
-    // the AUTHORITATIVE check is inside commitManifest's single-listing
-    // loop (see its TOCTOU note). Cost note: every check lists and
+    // the AUTHORITATIVE check is inside the single-listing commit loop
+    // ([[casCommit]], see its TOCTOU note). Cost note: every check lists and
     // parses the manifest log — O(commits) per commit against an
     // untruncated log. The fix is Delta's, and implemented here:
     // checkpoints absorb the token set ([[commitCheckpoint]]) and
@@ -2723,7 +2724,7 @@ object TxLog {
       n => defaultsIn(propsFrom(ms0)).contains(physicalName(colMapFrom(ms0), n))))
     val (rel, stats) = stageWrite(s, new Path(table), df, listed = Some(ms0))
     commitManifest(s, table, rel, stats, writerId, batchId, checkpoint = false,
-      maxRetries, incoming = Some(df.schema), legacyExisting = legacyExisting,
+      incoming = Some(df.schema), legacyExisting = legacyExisting,
       cmAtStaging = Some(colMapFrom(ms0)))
   }
 
@@ -2742,7 +2743,7 @@ object TxLog {
     * O(live-files) manifest strings FIRST, zone maps within the
     * surviving partitions. */
   def commitPartitioned(df: DataFrame, table: String, partitionBy: Seq[String],
-                        writerId: String, batchId: Long, maxRetries: Int = 20): Long = {
+                        writerId: String, batchId: Long): Long = {
     guardWriterId(writerId)
     require(partitionBy.nonEmpty, "commitPartitioned needs at least one partition column")
     val s = df.sparkSession
@@ -2775,7 +2776,7 @@ object TxLog {
     val (rel, stats) = stagePartitioned(s, new Path(table), df, physSpecs,
       clusterTasks = Some(0), listed = Some(ms0))
     commitManifest(s, table, rel, stats, writerId, batchId, checkpoint = false,
-      maxRetries, incoming = Some(df.schema), legacyExisting = legacyExisting,
+      incoming = Some(df.schema), legacyExisting = legacyExisting,
       pcols = physSpecs, cmAtStaging = Some(cm))
   }
 
@@ -2945,7 +2946,6 @@ object TxLog {
                                   rel: Seq[String], stats: Seq[TxStats.FileStats],
                                   writerId: String, batchId: Long,
                                   incoming: org.apache.spark.sql.types.StructType,
-                                  maxRetries: Int = 20,
                                   stagedPcols: Seq[String] = Seq.empty,
                                   cmAtStaging: Option[ColMap] = None): Long = {
     val ms0 = manifests(s, table)
@@ -2963,7 +2963,7 @@ object TxLog {
         liveFiles(ms0).headOption.map(h => GraftParquetFooter.schema(s, absPath(table)(h)))
       else None
     commitManifest(s, table, rel, stats, writerId, batchId, checkpoint = false,
-      maxRetries, incoming = Some(incoming), legacyExisting = legacyExisting,
+      incoming = Some(incoming), legacyExisting = legacyExisting,
       cmAtStaging = cmAtStaging)
   }
 
@@ -2989,25 +2989,13 @@ object TxLog {
       defaultPropsReset = true)
   }
 
-  /** Stage a manifest and publish it into the next free version slot.
-    *
-    * Correctness of the exactly-once token under twin writers (a
-    * zombie driver replaying the same (writerId, batchId) concurrently
-    * with its replacement): BOTH the token check and the head version
-    * come from ONE listing per attempt — two listings would open a
-    * TOCTOU window where the twin publishes between them and this
-    * writer then lands the same token in the next free slot. With one
-    * listing the argument closes: a successful put targets
-    * head(listing)+1, so if the twin's manifest preceded the listing
-    * we return −1; if it landed after, it occupies a slot ≥ our
-    * target → our put either loses that exact slot or loses a slot to
-    * a third writer below it; every lost put re-lists, and that
-    * listing now includes the twin's token → −1. Two same-token
-    * manifests can never both publish. */
+  /** Stage a manifest and publish it into the next free version slot
+    * ([[casCommit]], whose one listing per attempt makes the token
+    * check exactly-once under twin writers). */
   private def commitManifest(s: SparkSession, table: String, files: Seq[String],
                              stats: Seq[TxStats.FileStats],
                              writerId: String, batchId: Long,
-                             checkpoint: Boolean, maxRetries: Int,
+                             checkpoint: Boolean,
                              incoming: Option[org.apache.spark.sql.types.StructType] = None,
                              legacyExisting: Option[org.apache.spark.sql.types.StructType] = None,
                              pcols: Seq[String] = Seq.empty,
@@ -3024,9 +3012,6 @@ object TxLog {
     // concurrent RENAME/DROP/evolve) cannot recurse
     val hook = publishRaceForTests
     if (hook != null) { publishRaceForTests = null; hook() }
-    val root = new Path(table)
-    val f = fs(s, root)
-    val logDir = new Path(root, LogDir)
     // branch-scoped commits ([[onBranch]]): data/DML/evolution commits
     // label their manifest with the branch; the operations that write
     // MAIN-LINEAGE-global metadata refuse — a checkpoint would replace
@@ -3041,167 +3026,157 @@ object TxLog {
         s"ADD COLUMN ... DEFAULT records a table property — a main-lineage " +
           s"transaction, not allowed on branch '$b'")
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val all = allManifests(s, table) // ONE listing: token + head together
+    casCommit(s, table, "commit") { (all, v) =>
       val ms = currentBranch match {
         case None => mainLineage(all)
         case Some(b) => branchLineage(all, b, table)
       }
-      if (tokenTaken(all, writerId, batchId))
-        return -1L
-      // version allocation is GLOBAL: the shared linear log arbitrates
-      // every lineage's CAS, so a branch commit takes the next slot
-      // even when its lineage head is older
-      val v = all.lastOption.map(_.version).getOrElse(-1L) + 1
-      // the schema merge runs against THIS attempt's listing, so a
-      // concurrent evolution that won an earlier slot folds in on retry
-      val merged = incoming.map { in =>
-        // columns with an initial default may be NOT NULL and may be
-        // missing from a write — readers fill the default, never null
-        lazy val ds = defaultsIn(propsFrom(ms))
-        lazy val cmD = colMapFrom(ms)
-        def hasDefault(n: String): Boolean =
-          addDefault.exists(_._1 == n) || ds.contains(physicalName(cmD, n))
-        tableSchemaFrom(ms).orElse(legacyExisting)
-          .map(ex => mergedSchema(ex, in, hasDefault)).getOrElse(in)
-      }
-      val schemaDdl = merged.map(ddlOf)
-      // COLUMN MAPPING x evolution: a NEW column on a mapped table
-      // needs a minted physical name recorded in the same transaction.
-      // Metadata-only commits (evolveSchema / ALTER ADD COLUMNS) mint
-      // freely (fresh `_i`-suffixed physicals on collision). A DATA
-      // write (r15) may evolve too — its staged files carry the new
-      // LOGICAL name as the on-disk column, so minting `l -> l` is
-      // consistent exactly when `l` is free among live+retired
-      // physicals at THIS attempt's listing (per-attempt recompute +
-      // put-if-absent close the race with concurrent colmap commits: a
-      // lost slot re-derives against the new mapping and re-judges).
-      // A clash stays loud: staged parquet cannot be renamed, and
-      // reusing a retired physical would resurrect dropped values.
-      // Collisions compare case-insensitively — Spark resolves names
-      // case-insensitively, so a physical differing only in case would
-      // still match old files' columns at read time.
-      val cmapOut: Option[ColMap] = (merged, colMapRecorded(ms)) match {
-        case (Some(mg), Some(cm)) if !(cm.map.isEmpty && cm.retired.isEmpty) =>
-          val known = cm.byLogical.keySet
-          val newCols = mg.fieldNames.toSeq.filterNot(known)
-          if (newCols.isEmpty) None // newest-wins keeps the standing record
-          else {
-            val takenL = scala.collection.mutable.Set.from(
-              (cm.map.map(_._2) ++ cm.retired)
-                .map(_.toLowerCase(java.util.Locale.ROOT)))
-            def free(p: String) = !takenL(p.toLowerCase(java.util.Locale.ROOT))
-            if (files.nonEmpty) {
-              val clash = newCols.filterNot(free)
-              if (clash.nonEmpty)
-                throw new IllegalArgumentException(
-                  s"table $table uses column mapping and new column(s) " +
-                    s"${clash.mkString(", ")} collide with a live or retired " +
-                    "physical name — declare them first (evolveSchema / ALTER " +
-                    "TABLE ... ADD COLUMNS) so a fresh physical name is minted")
-              Some(ColMap(cm.map ++ newCols.map(l => l -> l), cm.retired))
-            } else {
-              val minted = newCols.map { l =>
-                val p =
-                  if (free(l)) l
-                  else {
-                    var i = 1
-                    while (!free(s"${l}_$i")) i += 1
-                    s"${l}_$i"
-                  }
-                takenL += p.toLowerCase(java.util.Locale.ROOT)
-                l -> p
-              }
-              Some(ColMap(cm.map ++ minted, cm.retired))
-            }
-          }
-        case _ => None
-      }
-      // r15 DRIFT GUARD: the staged files speak physicalName(cm@staging, l)
-      // for every column the write carried. If a concurrent schema
-      // transaction changed any of those resolutions between staging and
-      // THIS attempt's listing (e.g. a declared evolution won the race
-      // and minted the same logical name onto a DIFFERENT physical —
-      // newCols is then empty and the clash check never runs), publishing
-      // would bind files whose on-disk column no reader can resolve:
-      // every row would read NULL. Conflict loudly instead.
-      if (files.nonEmpty) (incoming, cmAtStaging) match {
-        case (Some(in), Some(cm0)) =>
-          val cmEff = cmapOut.orElse(colMapRecorded(ms))
-            .getOrElse(ColMap(Seq.empty, Seq.empty))
-          val drifted = in.fieldNames.toSeq.filter(l =>
-            physicalName(cm0, l) != physicalName(cmEff, l))
-          if (drifted.nonEmpty) throw new java.util.ConcurrentModificationException(
-            s"table $table: the column mapping of ${drifted.mkString(", ")} " +
-              "changed between this write's staging and its publish (a " +
-              "concurrent schema transaction) — re-run the write on the new snapshot")
-        case _ => ()
-      }
-      // ADD COLUMN ... DEFAULT: the default property rides in the SAME
-      // manifest as the evolved schema (and the minted mapping entry on
-      // mapped tables) — resolved against THIS attempt's effective
-      // mapping, so there is no crash window where the column exists
-      // without its default, and the key lands on the column's final
-      // physical name whatever the mint decided
-      val propsOut: Option[Seq[(String, String)]] = addDefault.map {
-        case (l, lit) =>
-          val cmEff = cmapOut.orElse(colMapRecorded(ms))
-            .getOrElse(ColMap(Seq.empty, Seq.empty))
-          (propsFrom(ms) +
-            (DefaultPropPrefix + physicalName(cmEff, l) -> lit)).toSeq.sorted
-      }
-      // EQUALITY DELETES: every entry's key columns must still resolve
-      // in the PHYSICAL schema of THIS attempt's listing — a concurrent
-      // DROP COLUMN between staging and publish would otherwise bind a
-      // sidecar no reader can probe (re-judged per retry, like the
-      // drift guard above)
-      if (eqdels.nonEmpty) {
-        val physNow = physicalSchemaFrom(ms).map(_.fieldNames.toSet)
-        physNow.foreach { names =>
-          val gone = eqdels.flatMap(_.cols).distinct.filterNot(names)
-          if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-            s"table $table: equality-delete key column(s) ${gone.mkString(", ")} " +
-              "left the schema between staging and publish (a concurrent DROP) — " +
-              "re-run against the new snapshot")
+      if (tokenTaken(all, writerId, batchId)) Left(-1L)
+      else {
+        // the schema merge runs against THIS attempt's listing, so a
+        // concurrent evolution that won an earlier slot folds in on retry
+        val merged = incoming.map { in =>
+          // columns with an initial default may be NOT NULL and may be
+          // missing from a write — readers fill the default, never null
+          lazy val ds = defaultsIn(propsFrom(ms))
+          lazy val cmD = colMapFrom(ms)
+          def hasDefault(n: String): Boolean =
+            addDefault.exists(_._1 == n) || ds.contains(physicalName(cmD, n))
+          tableSchemaFrom(ms).orElse(legacyExisting)
+            .map(ex => mergedSchema(ex, in, hasDefault)).getOrElse(in)
         }
-      }
-      // CHANGE-CAPTURE GUARD ([[keyedChangeCapture]]): the staged delta
-      // diffed the snapshot at `captureBase` — a concurrent commit that
-      // changed the row multiset past it would make the recorded
-      // pre-image silently wrong (rows it added would be keyed-deleted
-      // uncaptured). Conflict loudly; metadata-only commits rebase fine.
-      captureBase.foreach { base =>
-        ms.filter(_.version > base).find(m =>
-            m.checkpoint || m.files.nonEmpty || m.removes.nonEmpty ||
-              m.dvs.nonEmpty || m.eqdels.nonEmpty || m.eqdrops.nonEmpty)
-          .foreach(m => throw new java.util.ConcurrentModificationException(
-            s"table $table changed rows at v${m.version} during a keyed write's " +
-              "change capture — re-run on the new snapshot"))
-      }
-      // a colmap mint is a newest-wins global record (see the branch
-      // guard above) — refuse it on a branch rather than clobber main
-      // at adoption
-      if (cmapOut.isDefined) currentBranch.foreach(b =>
-        throw new IllegalArgumentException(
-          s"column-mapping changes are main-lineage transactions — not " +
-            s"allowed on branch '$b'"))
-      // ROW LINEAGE: this commit's files take the next id ranges —
-      // re-allocated per attempt. A capture-bearing commit records the
-      // attempt's base (`nrid`): `-i2` change entries resolve their
-      // fresh-mint offsets against it at read ([[TxRowId.GoffCol]])
-      val statsOut = assignRowIds(all, files, stats)
-      val m =
-        Manifest(v, files, writerId, batchId, checkpoint, statsOut,
+        val schemaDdl = merged.map(ddlOf)
+        // COLUMN MAPPING x evolution: a NEW column on a mapped table
+        // needs a minted physical name recorded in the same transaction.
+        // Metadata-only commits (evolveSchema / ALTER ADD COLUMNS) mint
+        // freely (fresh `_i`-suffixed physicals on collision). A DATA
+        // write (r15) may evolve too — its staged files carry the new
+        // LOGICAL name as the on-disk column, so minting `l -> l` is
+        // consistent exactly when `l` is free among live+retired
+        // physicals at THIS attempt's listing (per-attempt recompute +
+        // put-if-absent close the race with concurrent colmap commits: a
+        // lost slot re-derives against the new mapping and re-judges).
+        // A clash stays loud: staged parquet cannot be renamed, and
+        // reusing a retired physical would resurrect dropped values.
+        // Collisions compare case-insensitively — Spark resolves names
+        // case-insensitively, so a physical differing only in case would
+        // still match old files' columns at read time.
+        val cmapOut: Option[ColMap] = (merged, colMapRecorded(ms)) match {
+          case (Some(mg), Some(cm)) if !(cm.map.isEmpty && cm.retired.isEmpty) =>
+            val known = cm.byLogical.keySet
+            val newCols = mg.fieldNames.toSeq.filterNot(known)
+            if (newCols.isEmpty) None // newest-wins keeps the standing record
+            else {
+              val takenL = scala.collection.mutable.Set.from(
+                (cm.map.map(_._2) ++ cm.retired)
+                  .map(_.toLowerCase(java.util.Locale.ROOT)))
+              def free(p: String) = !takenL(p.toLowerCase(java.util.Locale.ROOT))
+              if (files.nonEmpty) {
+                val clash = newCols.filterNot(free)
+                if (clash.nonEmpty)
+                  throw new IllegalArgumentException(
+                    s"table $table uses column mapping and new column(s) " +
+                      s"${clash.mkString(", ")} collide with a live or retired " +
+                      "physical name — declare them first (evolveSchema / ALTER " +
+                      "TABLE ... ADD COLUMNS) so a fresh physical name is minted")
+                Some(ColMap(cm.map ++ newCols.map(l => l -> l), cm.retired))
+              } else {
+                val minted = newCols.map { l =>
+                  val p =
+                    if (free(l)) l
+                    else {
+                      var i = 1
+                      while (!free(s"${l}_$i")) i += 1
+                      s"${l}_$i"
+                    }
+                  takenL += p.toLowerCase(java.util.Locale.ROOT)
+                  l -> p
+                }
+                Some(ColMap(cm.map ++ minted, cm.retired))
+              }
+            }
+          case _ => None
+        }
+        // r15 DRIFT GUARD: the staged files speak physicalName(cm@staging, l)
+        // for every column the write carried. If a concurrent schema
+        // transaction changed any of those resolutions between staging and
+        // THIS attempt's listing (e.g. a declared evolution won the race
+        // and minted the same logical name onto a DIFFERENT physical —
+        // newCols is then empty and the clash check never runs), publishing
+        // would bind files whose on-disk column no reader can resolve:
+        // every row would read NULL. Conflict loudly instead.
+        if (files.nonEmpty) (incoming, cmAtStaging) match {
+          case (Some(in), Some(cm0)) =>
+            val cmEff = cmapOut.orElse(colMapRecorded(ms))
+              .getOrElse(ColMap(Seq.empty, Seq.empty))
+            val drifted = in.fieldNames.toSeq.filter(l =>
+              physicalName(cm0, l) != physicalName(cmEff, l))
+            if (drifted.nonEmpty) throw new java.util.ConcurrentModificationException(
+              s"table $table: the column mapping of ${drifted.mkString(", ")} " +
+                "changed between this write's staging and its publish (a " +
+                "concurrent schema transaction) — re-run the write on the new snapshot")
+          case _ => ()
+        }
+        // ADD COLUMN ... DEFAULT: the default property rides in the SAME
+        // manifest as the evolved schema (and the minted mapping entry on
+        // mapped tables) — resolved against THIS attempt's effective
+        // mapping, so there is no crash window where the column exists
+        // without its default, and the key lands on the column's final
+        // physical name whatever the mint decided
+        val propsOut: Option[Seq[(String, String)]] = addDefault.map {
+          case (l, lit) =>
+            val cmEff = cmapOut.orElse(colMapRecorded(ms))
+              .getOrElse(ColMap(Seq.empty, Seq.empty))
+            (propsFrom(ms) +
+              (DefaultPropPrefix + physicalName(cmEff, l) -> lit)).toSeq.sorted
+        }
+        // EQUALITY DELETES: every entry's key columns must still resolve
+        // in the PHYSICAL schema of THIS attempt's listing — a concurrent
+        // DROP COLUMN between staging and publish would otherwise bind a
+        // sidecar no reader can probe (re-judged per retry, like the
+        // drift guard above)
+        if (eqdels.nonEmpty) {
+          val physNow = physicalSchemaFrom(ms).map(_.fieldNames.toSet)
+          physNow.foreach { names =>
+            val gone = eqdels.flatMap(_.cols).distinct.filterNot(names)
+            if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
+              s"table $table: equality-delete key column(s) ${gone.mkString(", ")} " +
+                "left the schema between staging and publish (a concurrent DROP) — " +
+                "re-run against the new snapshot")
+          }
+        }
+        // CHANGE-CAPTURE GUARD ([[keyedChangeCapture]]): the staged delta
+        // diffed the snapshot at `captureBase` — a concurrent commit that
+        // changed the row multiset past it would make the recorded
+        // pre-image silently wrong (rows it added would be keyed-deleted
+        // uncaptured). Conflict loudly; metadata-only commits rebase fine.
+        captureBase.foreach { base =>
+          ms.filter(_.version > base).find(m =>
+              m.checkpoint || m.files.nonEmpty || m.removes.nonEmpty ||
+                m.dvs.nonEmpty || m.eqdels.nonEmpty || m.eqdrops.nonEmpty)
+            .foreach(m => throw new java.util.ConcurrentModificationException(
+              s"table $table changed rows at v${m.version} during a keyed write's " +
+                "change capture — re-run on the new snapshot"))
+        }
+        // a colmap mint is a newest-wins global record (see the branch
+        // guard above) — refuse it on a branch rather than clobber main
+        // at adoption
+        if (cmapOut.isDefined) currentBranch.foreach(b =>
+          throw new IllegalArgumentException(
+            s"column-mapping changes are main-lineage transactions — not " +
+              s"allowed on branch '$b'"))
+        // ROW LINEAGE: this commit's files take the next id ranges —
+        // re-allocated per attempt. A capture-bearing commit records the
+        // attempt's base (`nrid`): `-i2` change entries resolve their
+        // fresh-mint offsets against it at read ([[TxRowId.GoffCol]])
+        val statsOut = assignRowIds(all, files, stats)
+        Right(Manifest(v, files, writerId, batchId, checkpoint, statsOut,
           schema = schemaDdl, pcols = pcols, ts = commitTimeMs(),
           cmap = cmapOut, props = propsOut, eqdels = eqdels,
           changes = changes, branch = currentBranch,
-          nextRid = if (changes.nonEmpty) nextRowId(all) else -1L)
-      if (publish(f, logDir, m)) return v
-      attempt += 1 // lost the version race; retry against the new head
+          nextRid = if (changes.nonEmpty) nextRowId(all) else -1L))
+      }
     }
-    throw new IllegalStateException(
-      s"commit of $table lost $maxRetries version races — livelocked writer set?")
   }
 
   /** THE commit point, and the only writer of manifests: render `m`
@@ -3210,7 +3185,8 @@ object TxLog {
     * delegated to the scheme's [[LogStore]] arbiter (hard-link on
     * file://, no-replace rename on HDFS-like stores, a registered
     * conditional-put store on object stores — see [[LogStore]]).
-    * False = a concurrent committer took the slot. */
+    * False = a concurrent committer took the slot. Called only by
+    * [[casCommit]]. */
   private def publish(f: FileSystem, logDir: Path, m: Manifest): Boolean = {
     LocalFs.fileSystem(logDir, f.getConf).mkdirs(logDir)
     val target = new Path(logDir, manifestName(m.version))
@@ -3830,14 +3806,13 @@ object TxLog {
     * ([[keyedChangeCapture]] — a pruned pre-image read, still no
     * rewrite), and a concurrent row-changing commit conflicts. */
   def deleteByKeys(keys: DataFrame, table: String, writerId: String,
-                   batchId: Long, maxRetries: Int = 20): Long = {
+                   batchId: Long): Long = {
     guardWriterId(writerId)
-    deleteByKeysInternal(keys, table, writerId, batchId, maxRetries)
+    deleteByKeysInternal(keys, table, writerId, batchId)
   }
 
   private[graft] def deleteByKeysInternal(keys: DataFrame, table: String,
-                                          writerId: String, batchId: Long,
-                                          maxRetries: Int = 20): Long = {
+                                          writerId: String, batchId: Long): Long = {
     val s = keys.sparkSession
     val ms0 = manifests(s, table)
     require(ms0.nonEmpty, s"not a txlog table: $table")
@@ -3854,7 +3829,7 @@ object TxLog {
       else keyedChangeCapture(s, table, ms0, entry,
         keyedPreImage(s, table, ms0, entry), inserts = None)
     commitManifest(s, table, Seq.empty, Seq.empty, writerId, batchId,
-      checkpoint = false, maxRetries, eqdels = Seq(entry), changes = changes,
+      checkpoint = false, eqdels = Seq(entry), changes = changes,
       captureBase = if (feedOn) Some(ms0.last.version) else None)
   }
 
@@ -3869,16 +3844,15 @@ object TxLog {
     * before the manifest publishes — the crash-injection seam the
     * streaming-recovery specs use (same contract as [[merge]]'s). */
   def upsertByKeys(source: DataFrame, table: String, keys: Seq[String],
-                   writerId: String, batchId: Long, maxRetries: Int = 20,
+                   writerId: String, batchId: Long,
                    beforeCommit: () => Unit = () => ()): Long = {
     guardWriterId(writerId)
-    upsertByKeysInternal(source, table, keys, writerId, batchId, maxRetries,
-      beforeCommit)
+    upsertByKeysInternal(source, table, keys, writerId, batchId, beforeCommit)
   }
 
   private[graft] def upsertByKeysInternal(source: DataFrame, table: String,
                                           keys: Seq[String], writerId: String,
-                                          batchId: Long, maxRetries: Int = 20,
+                                          batchId: Long,
                                           beforeCommit: () => Unit = () => ())
       : Long = {
     val s = source.sparkSession
@@ -3891,7 +3865,7 @@ object TxLog {
     // first/schema-defining write, or an emptied table: a plain append
     // (nothing prior to delete from; schema guards as in commit)
     if (liveFiles(ms0).isEmpty)
-      return commitInternal(source, table, writerId, batchId, maxRetries)
+      return commitInternal(source, table, writerId, batchId)
     sch.foreach { t =>
       require(source.columns.toSet == t.fieldNames.toSet,
         s"upsert source columns ${source.columns.toSet} != table columns " +
@@ -3941,7 +3915,7 @@ object TxLog {
               inserts = Some(neu))
             beforeCommit()
             commitManifest(s, table, rel, stats, writerId, batchId,
-              checkpoint = false, maxRetries, incoming = Some(dropGrid(staged.schema)),
+              checkpoint = false, incoming = Some(dropGrid(staged.schema)),
               pcols = pcols, cmAtStaging = Some(colMapFrom(ms0)),
               eqdels = Seq(entry), changes = changes,
               captureBase = Some(ms0.last.version))
@@ -3952,7 +3926,7 @@ object TxLog {
               else stageWrite(s, root, src)
             beforeCommit()
             commitManifest(s, table, rel, stats, writerId, batchId,
-              checkpoint = false, maxRetries, incoming = Some(src.schema),
+              checkpoint = false, incoming = Some(src.schema),
               pcols = pcols, cmAtStaging = Some(colMapFrom(ms0)),
               eqdels = Seq(entry), changes = Seq.empty)
           }
@@ -4339,7 +4313,7 @@ object TxLog {
     * only correct against the snapshot it read — and the staged uuid
     * dir becomes vacuum-collectable garbage, exactly like a crash
     * before publish. Token check and head come from ONE listing
-    * (commitManifest's TOCTOU argument); `beforeCommit` is the
+    * ([[casCommit]]'s TOCTOU argument); `beforeCommit` is the
     * crash/interleave injection seam for the specs. `readSet` is the
     * operation's read footprint beyond `removes` (the pruned candidate
     * files it scanned to decide what to touch) — the disjointness
@@ -4412,13 +4386,10 @@ object TxLog {
                                     writerId: String, batchId: Long,
                                     schemaDdl: String,
                                     readSet: Seq[String] = Seq.empty,
-                                    maxRetries: Int = 20,
                                     dvs: Seq[DvEntry] = Seq.empty,
                                     captureOverride: Option[Map[String, Long] => Seq[String]] = None,
                                     eqdrops: Seq[String] = Seq.empty)
       : Rewrite = {
-    val root = new Path(table)
-    val f = fs(s, root)
     val nonEmpty = statsAll.filter(_.rows > 0).map(_.file).toSet
     val rel = relAll.filter(nonEmpty)
     val stats = statsAll.filter(st => nonEmpty(st.file))
@@ -4438,88 +4409,79 @@ object TxLog {
     // allocation rebases per attempt like any other commit and a
     // concurrent id-minting append never invalidates the capture.
     var captured: Option[Seq[String]] = None
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val allNow = allManifests(s, table) // ONE listing: token + head together
+    val published = casCommit(s, table, "row-level rewrite") { (allNow, v) =>
       val msNow = currentBranch match {
         case None => mainLineage(allNow)
         case Some(b) => branchLineage(allNow, b, table)
       }
-      if (tokenTaken(allNow, writerId, batchId)) return Rewrite(-1L, 0, 0)
-      def conflict(why: String) = new java.util.ConcurrentModificationException(
-        s"$table $why during a row-level rewrite — re-run on the new snapshot")
-      val head = msNow.lastOption.map(_.version).getOrElse(-1L)
-      if (head != base) {
-        if (!propsFrom(msNow).get(IsolationProp).contains(IsolationWriteSerializable))
-          throw conflict(s"moved past v$base")
-        val newer = msNow.filter(_.version > base)
-        newer.find(_.checkpoint).foreach(m => throw conflict(
-          s"got a checkpoint at v${m.version} (live set replaced) past v$base"))
-        newer.find(m => m.removes.exists(footprint) ||
-            m.dvs.exists(d => footprint(d.f))).foreach(m => throw conflict(
-          s"had files this operation read rewritten at v${m.version}"))
-        // an interleaved EQUALITY DELETE is key-addressed — whether it
-        // touches this rewrite's rows is unknowable without reading, and
-        // rebasing past it would let the rewrite's fresh files (seq >
-        // the entry's version) RESURRECT deleted keys. Always conflict.
-        newer.find(m => m.eqdels.nonEmpty || m.eqdrops.nonEmpty)
-          .foreach(m => throw conflict(
-            s"committed equality deletes at v${m.version} past v$base"))
-        // a concurrent RENAME/DROP COLUMN cannot be rebased over: this
-        // rewrite's recorded schema speaks the PRE-rename logical names,
-        // and merging it with the renamed one would duplicate the column
-        // under both names (evolution sees a rename as drop+add)
-        newer.find(_.cmap.isDefined).foreach(m => throw conflict(
-          s"changed the column mapping at v${m.version} (RENAME/DROP COLUMN) past v$base"))
-        newer.flatMap(_.schema)
-          .map(org.apache.spark.sql.types.StructType.fromDDL)
-          .foreach(in => recorded = mergedSchema(recorded, in,
-            n => defaultsIn(propsFrom(msNow)).contains(
-              physicalName(colMapFrom(msNow), n))))
-        base = head
-      }
-      // GLOBAL version allocation (the shared log arbitrates every
-      // lineage) — the LINEAGE head gate above stays `base`-relative
-      val v = allNow.lastOption.map(_.version).getOrElse(-1L) + 1
-      // CHANGE-DATA-FEED capture (the `changeFeed` table property): the
-      // row-level difference this rewrite makes, staged as change files
-      // the manifest references — a crash/conflict before the put leaves
-      // only vacuum-collectable orphans, same as the rewrite's own files
-      val changes =
-        if (!propsFrom(msNow).get(ChangeFeedProp).contains("true")) Seq.empty
-        else captured.getOrElse {
-          val offsets = ridOffsets(rel, stats)
-          val c = captureOverride.map(_.apply(offsets))
-            .getOrElse(captureChanges(s, table, removes, rel, schemaDdl,
-              // the OLD side of the diff is the removed files' LIVE rows
-              // — a previously-DV'd row was already reported deleted and
-              // must not be re-reported when its file is finally rewritten
-              liveDvs(msNow).view.filterKeys(removes.contains).mapValues(_.p).toMap,
-              offsets))
-          captured = Some(c); c
+      if (tokenTaken(allNow, writerId, batchId)) Left(-1L)
+      else {
+        def conflict(why: String) = new java.util.ConcurrentModificationException(
+          s"$table $why during a row-level rewrite — re-run on the new snapshot")
+        val head = msNow.lastOption.map(_.version).getOrElse(-1L)
+        if (head != base) {
+          if (!propsFrom(msNow).get(IsolationProp).contains(IsolationWriteSerializable))
+            throw conflict(s"moved past v$base")
+          val newer = msNow.filter(_.version > base)
+          newer.find(_.checkpoint).foreach(m => throw conflict(
+            s"got a checkpoint at v${m.version} (live set replaced) past v$base"))
+          newer.find(m => m.removes.exists(footprint) ||
+              m.dvs.exists(d => footprint(d.f))).foreach(m => throw conflict(
+            s"had files this operation read rewritten at v${m.version}"))
+          // an interleaved EQUALITY DELETE is key-addressed — whether it
+          // touches this rewrite's rows is unknowable without reading, and
+          // rebasing past it would let the rewrite's fresh files (seq >
+          // the entry's version) RESURRECT deleted keys. Always conflict.
+          newer.find(m => m.eqdels.nonEmpty || m.eqdrops.nonEmpty)
+            .foreach(m => throw conflict(
+              s"committed equality deletes at v${m.version} past v$base"))
+          // a concurrent RENAME/DROP COLUMN cannot be rebased over: this
+          // rewrite's recorded schema speaks the PRE-rename logical names,
+          // and merging it with the renamed one would duplicate the column
+          // under both names (evolution sees a rename as drop+add)
+          newer.find(_.cmap.isDefined).foreach(m => throw conflict(
+            s"changed the column mapping at v${m.version} (RENAME/DROP COLUMN) past v$base"))
+          newer.flatMap(_.schema)
+            .map(org.apache.spark.sql.types.StructType.fromDDL)
+            .foreach(in => recorded = mergedSchema(recorded, in,
+              n => defaultsIn(propsFrom(msNow)).contains(
+                physicalName(colMapFrom(msNow), n))))
+          base = head
         }
-      val logDir = new Path(root, LogDir)
-      // ROW LINEAGE: allocation per attempt (rebases like the version
-      // slot). A capture-bearing manifest records the attempt's base
-      // (`nrid`) — the value `-i2` change entries resolve their
-      // fresh-mint offsets against at read ([[TxRowId.GoffCol]])
-      val statsOut = assignRowIds(allNow, rel, stats)
-      val m =
-        Manifest(v, rel, writerId, batchId, checkpoint = false, statsOut, removes,
+        // CHANGE-DATA-FEED capture (the `changeFeed` table property): the
+        // row-level difference this rewrite makes, staged as change files
+        // the manifest references — a crash/conflict before the put leaves
+        // only vacuum-collectable orphans, same as the rewrite's own files
+        val changes =
+          if (!propsFrom(msNow).get(ChangeFeedProp).contains("true")) Seq.empty
+          else captured.getOrElse {
+            val offsets = ridOffsets(rel, stats)
+            val c = captureOverride.map(_.apply(offsets))
+              .getOrElse(captureChanges(s, table, removes, rel, schemaDdl,
+                // the OLD side of the diff is the removed files' LIVE rows
+                // — a previously-DV'd row was already reported deleted and
+                // must not be re-reported when its file is finally rewritten
+                liveDvs(msNow).view.filterKeys(removes.contains).mapValues(_.p).toMap,
+                offsets))
+            captured = Some(c); c
+          }
+        // ROW LINEAGE: allocation per attempt (rebases like the version
+        // slot). A capture-bearing manifest records the attempt's base
+        // (`nrid`) — the value `-i2` change entries resolve their
+        // fresh-mint offsets against at read ([[TxRowId.GoffCol]])
+        val statsOut = assignRowIds(allNow, rel, stats)
+        Right(Manifest(v, rel, writerId, batchId, checkpoint = false, statsOut, removes,
           // a rewrite reads through the table schema, so its output IS
           // the table schema — recorded verbatim (keeps evolved reads
           // O(0 inference) after DML), widened by any schema a rebased
           // concurrent append evolved in
           schema = Some(ddlOf(recorded)), changes = changes, ts = commitTimeMs(),
           dvs = dvs, eqdrops = eqdrops, branch = currentBranch,
-          nextRid = if (changes.nonEmpty) nextRowId(allNow) else -1L)
-      if (publish(f, logDir, m))
-        return Rewrite(v, removes.size + dvs.size, rel.size)
-      attempt += 1 // lost the slot race: re-list; serializable callers
-                   // then see a moved head and conflict, rebasing ones retry
+          nextRid = if (changes.nonEmpty) nextRowId(allNow) else -1L))
+      }
     }
-    throw new IllegalStateException(
-      s"row-level rewrite of $table lost $maxRetries version races — livelocked writer set?")
+    if (published < 0) Rewrite(-1L, 0, 0)
+    else Rewrite(published, removes.size + dvs.size, rel.size)
   }
 
   /** Row-level CHANGES of a copy-on-write rewrite, computed post-hoc as
@@ -4989,7 +4951,6 @@ object TxLog {
                                schemaDdl: Option[String] = None,
                                removes: Seq[String] = Seq.empty,
                                changes: Seq[String] = Seq.empty,
-                               maxRetries: Int = 20,
                                dvs: Seq[DvEntry] = Seq.empty,
                                pcolsOverride: Option[Seq[String]] = None,
                                propsOverride: Option[Map[String, String]] = None,
@@ -5000,9 +4961,6 @@ object TxLog {
       s"checkpoint commits (compact/cluster/overwrite/restore) are " +
         s"main-lineage operations — not allowed on branch " +
         s"'${currentBranch.getOrElse("")}'")
-    val root = new Path(table)
-    val f = fs(s, root)
-    val logDir = new Path(root, LogDir)
     var base = expectedHead
     var carriedFiles = files
     var carriedStats = stats
@@ -5010,9 +4968,7 @@ object TxLog {
     // must survive into the checkpoint's recorded schema or reads of
     // the rebased file would silently drop them
     var carriedSchema = schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val all = allManifests(s, table)
+    casCommit(s, table, "checkpoint") { (all, v) =>
       val ms = mainLineage(all)
       val newer = ms.filter(_.version > base)
       // dvs count as rewrites: rebasing over a concurrent merge-on-read
@@ -5033,8 +4989,6 @@ object TxLog {
               physicalName(colMapFrom(ms), n)))).getOrElse(in))
         }
       base = ms.lastOption.map(_.version).getOrElse(-1L)
-      // GLOBAL version allocation (branch commits share the linear log)
-      val v = all.lastOption.map(_.version).getOrElse(-1L) + 1
       // ABSORB every idempotence token the checkpoint supersedes (incl.
       // lists absorbed by earlier checkpoints), COMPRESSED to the
       // per-writer high-water mark (see [[tokenTaken]]) so the list is
@@ -5061,7 +5015,7 @@ object TxLog {
         statsOut.iterator.filter(_.firstRowId >= 0L)
           .map(st => st.firstRowId + math.max(st.rows, 0L))
           .foldLeft(0L)(math.max))
-      val m = Manifest(v, carriedFiles, writerId, batchId = 0L,
+      Right(Manifest(v, carriedFiles, writerId, batchId = 0L,
         checkpoint = true, statsOut, removes = removes, changes = changes,
         schema = carriedSchema.map(ddlOf), tokens = absorbed, nextRid = nrid,
         // the partition layout AND properties must SURVIVE log
@@ -5082,12 +5036,8 @@ object TxLog {
         ts = commitTimeMs(), dvs = dvs,
         // the column mapping must survive log truncation like pcols/
         // props; overwrite/restore override it (reset / as-of-v)
-        cmap = cmapOverride.getOrElse(colMapRecorded(ms)))
-      if (publish(f, logDir, m)) return v
-      attempt += 1 // lost the slot race; re-list and rebase again
+        cmap = cmapOverride.getOrElse(colMapRecorded(ms))))
     }
-    throw new IllegalStateException(
-      s"checkpoint of $table lost $maxRetries version races — livelocked writer set?")
   }
 
   /** Atomically REPLACE the table's contents with `df` (SaveMode
@@ -5330,7 +5280,7 @@ object TxLog {
     * (file, column) of manifest — the same order as the bounds already
     * there. */
   def analyze(s: SparkSession, table: String, cols: Seq[String],
-              maxRetries: Int = 20, batchFiles: Int = 10000): AnalyzeReport = {
+              batchFiles: Int = 10000): AnalyzeReport = {
     require(cols.nonEmpty, "analyze: need at least one column")
     val ms0 = manifests(s, table)
     require(ms0.nonEmpty, s"not a txlog table: $table")
@@ -5464,8 +5414,7 @@ object TxLog {
       if (changed.nonEmpty) {
         lastV = commitManifest(s, table, files = Seq.empty,
           stats = changed.map(finalMap), batchId = 0L, checkpoint = false,
-          writerId = s"analyze-${java.util.UUID.randomUUID()}",
-          maxRetries = maxRetries)
+          writerId = s"analyze-${java.util.UUID.randomUUID()}")
         updated += changed.size
       }
     }

@@ -2,6 +2,7 @@ package graft.storage
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
@@ -197,7 +198,10 @@ object TxStats {
                          exactStrings: Boolean = true)
       : (FileStats, (String, Set[String])) = {
     val inf = HadoopInputFile.fromPath(new Path(root, r), conf)
-    val rd = ParquetFileReader.open(inf)
+    // read options from the caller's conf: the no-options open builds a
+    // fresh Hadoop Configuration (a parse of the default XML resources)
+    // for every footer
+    val rd = ParquetFileReader.open(inf, HadoopReadOptions.builder(conf).build())
     try {
       val md = rd.getFooter
       val blocks = md.getBlocks.asScala.toSeq

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the set of runnable mains and session builders from growing back:
   * one-off probes belong in `graft.tools.Probe` or `perfbench/`, every
   * session is built through [[GraftSession.local]], every parquet read
-  * is given its schema, and every ETL and storage file write creates its
-  * local files through `graft.storage.LocalFs`. */
+  * is given its schema, every ETL and storage file write creates its
+  * local files through `graft.storage.LocalFs`, and every txlog manifest
+  * is published from one commit loop. */
 class EntryPointLintSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(Path, Seq[String])] = {
@@ -74,6 +75,19 @@ class EntryPointLintSpec extends AnyFunSuite {
       line <- EntryPointLintSpec.unguardedWrites(lines.filterNot(isComment))
     } yield s"${path.getFileName}: $line"
     assert(sites.isEmpty, sites)
+  }
+
+  test("graft/storage publishes manifests from one commit loop") {
+    // TxLog.casCommit is the only caller of publish; a second caller or
+    // a hand-rolled `while (attempt` retry loop is a copy of it
+    def sites(p: scala.util.matching.Regex) = for {
+      (path, lines) <- sources
+      if path.toString.contains("graft/storage/")
+      (line, i) <- lines.zipWithIndex
+      if !isComment(line) && p.findFirstIn(line).isDefined
+    } yield s"${path.getFileName}:${i + 1}"
+    assert(sites("""(?<!def )\bpublish\(""".r).size == 1, sites("""(?<!def )\bpublish\(""".r))
+    assert(sites("""while \(attempt""".r).isEmpty)
   }
 
   test("the write lint finds an unguarded writer chain, one line or several") {

@@ -82,7 +82,7 @@ class LogStoreSpec extends AnyFunSuite {
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val threads = (0 until 8).map { i =>
         new Thread(() => {
-          try { TxLog.commit(batch(i * 10 until (i + 1) * 10), t, s"w$i", 0L, maxRetries = 100); () }
+          try { TxLog.commit(batch(i * 10 until (i + 1) * 10), t, s"w$i", 0L); () }
           catch { case e: Throwable => errs.add(e); () }
         })
       }
